@@ -11,8 +11,7 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.PlanDump <outDir> <suffix> [q1,q2,...]"
   * Defaults to every bench query when no list is given. Write-path
   * queries build their table first (same code path as Bench), so the
-  * dumped plan is the final read — the staged-write plan is dumped
-  * separately by the GRAFT_PUBLISH_DEBUG hook.
+  * dumped plan is the final read, not the staged write.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -1,6 +1,6 @@
 package graft.read
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -11,11 +11,13 @@ import graft.write.{GraftTable, Meta}
   * DefaultSource relation zoo, DefaultSource.scala:72-137 — snapshot /
   * read_optimized / incremental / time-travel / point lookup).
   *
-  * Scale posture: file lists come from commit metadata (never a data
-  * listing); delta-bearing file groups are merged with a window that
-  * shuffles ONLY those groups' rows — delta-free groups stream straight
-  * from Parquet with full pushdown. Partition pruning happens before any
-  * file is opened by filtering slices on the partition-path column.
+  * Scale posture: every file list comes from commit metadata and is
+  * scanned through [[GraftTable.readStatsDf]]'s [[GraftFileIndex]]
+  * relation (never a storage listing); delta-bearing file groups are
+  * merged with a window that shuffles ONLY those groups' rows —
+  * delta-free groups stream straight from Parquet with full pushdown.
+  * Partition pruning happens before any file is opened by filtering
+  * slices on the partition-path column.
   */
 class GraftReader(table: GraftTable) {
   import Meta._
@@ -28,52 +30,19 @@ class GraftReader(table: GraftTable) {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       if (schema.isEmpty) StructType(Nil) else schema)
 
-  private def readFiles(schema: StructType, stats: Seq[WriteStat]): DataFrame =
-    if (stats.isEmpty) emptyWith(schema)
-    else table.readStatsDf(schema, stats)
-
-  /** Delta-free NATIVE files go through [[GraftFileIndex]]: stats-pruned
-    * file list + full Catalyst pushdown, no storage listing. External
-    * (bootstrapped) files read through the meta-stamping path. */
-  private def readBase(schema: StructType, stats: Seq[WriteStat]): DataFrame = {
-    if (stats.isEmpty) return emptyWith(schema)
-    val (ext, native) = stats.partition(_.external)
-    val cfg = table.config
-    val nativeDf =
-      if (native.isEmpty) None
-      else if (cfg.virtualKeys) {
-        // files hold only data columns; stats pruning still runs over
-        // them, then every meta column is stamped from commit metadata
-        val stored = table.virtualStoredSchema(schema)
-        val rel =
-          if (cfg.dropPartitionColumns && cfg.partitionFields.nonEmpty) {
-            // layout input = stored columns + the (typed) partition
-            // fields, so the split finds their declared types
-            val withPf = StructType(stored.fields ++
-              schema.fields.filter(f => cfg.partitionFields.contains(f.name)))
-            val (dataSchema, partSchema, rows) =
-              table.partitionedReadLayout(withPf, native.map(_.partition))
-            GraftFileIndex.relation(spark, table.basePath, native,
-              dataSchema, partSchema, rows, fileFormat = cfg.dataFormat)
-          } else GraftFileIndex.relation(spark, table.basePath, native, stored,
-            fileFormat = cfg.dataFormat, partitionFields = cfg.partitionFields)
-        Some(table.stampVirtual(rel, schema, native))
-      } else if (cfg.dropPartitionColumns && cfg.partitionFields.nonEmpty) {
-        // partition fields live only in the path: declare them as a real
-        // partition schema so the scan appends typed values from commit
-        // metadata and Catalyst's partition filters prune groups exactly
-        val (dataSchema, partSchema, rows) =
-          table.partitionedReadLayout(schema, native.map(_.partition))
-        Some(GraftFileIndex.relation(spark, table.basePath, native,
-            dataSchema, partSchema, rows, fileFormat = cfg.dataFormat)
-          .select(schema.fieldNames.toSeq.map(col): _*))
-      } else Some(GraftFileIndex.relation(spark, table.basePath, native, schema,
-        fileFormat = cfg.dataFormat, partitionFields = cfg.partitionFields))
-    val parts = Seq(
-      nativeDf,
-      if (ext.isEmpty) None else Some(table.readStatsDf(schema, ext))
-    ).flatten
-    parts.reduce(_.unionByName(_))
+  /** Latest version of every row in `slices`: delta-free groups stream
+    * straight from their base files, delta-bearing groups are merged.
+    * `pre` runs on both reads before the merge (a key filter belongs
+    * below the merge window). Tombstones are not filtered here. */
+  private def latest(
+      schema: StructType,
+      slices: Seq[FileSlice],
+      pre: DataFrame => DataFrame = identity): DataFrame = {
+    val (dirty, clean) = slices.partition(_.deltas.nonEmpty)
+    val cleanDf = pre(table.readStatsDf(schema, clean.flatMap(_.baseFile)))
+    if (dirty.isEmpty) cleanDf
+    else cleanDf.unionByName(
+      table.mergeLatest(pre(table.readStatsDf(schema, dirty.flatMap(_.allFiles)))))
   }
 
   /** Snapshot at `asOf` (None = latest). `partitionFilter` prunes file
@@ -98,15 +67,7 @@ class GraftReader(table: GraftTable) {
       case Some(ps) => snap.slices.filter(s => ps.contains(s.partition))
       case None     => snap.slices
     }
-    val (dirty, clean) = slices.partition(_.deltas.nonEmpty)
-    val cleanDf = readBase(schema, clean.flatMap(_.baseFile))
-    val merged =
-      if (dirty.isEmpty) cleanDf
-      else {
-        val dirtyDf = readFiles(schema, dirty.flatMap(_.allFiles))
-        cleanDf.unionByName(table.mergeLatest(dirtyDf))
-      }
-    merged.filter(!col(Deleted))
+    latest(schema, slices).filter(!col(Deleted))
   }
 
   /** Read-optimized view: base files only, ignoring pending deltas
@@ -115,7 +76,7 @@ class GraftReader(table: GraftTable) {
     val snap = Snapshot.resolve(timeline, asOf)
     val schema = table.readSchema(snap)
     if (snap.isEmpty || schema.isEmpty) return emptyWith(schema)
-    readBase(schema, snap.slices.flatMap(_.baseFile)).filter(!col(Deleted))
+    table.readStatsDf(schema, snap.slices.flatMap(_.baseFile)).filter(!col(Deleted))
   }
 
   /** Change stream: latest state of every record changed in
@@ -156,12 +117,8 @@ class GraftReader(table: GraftTable) {
     }
     val slices = snap.slices.filter(s =>
       touched.contains((s.partition, s.fileId)) && globMatch(s.partition))
-    val (dirty, cleanSlices) = slices.partition(_.deltas.nonEmpty)
-    val cleanDf = readBase(schema, cleanSlices.flatMap(_.baseFile))
-    val all =
-      if (dirty.isEmpty) cleanDf
-      else cleanDf.unionByName(table.mergeLatest(readFiles(schema, dirty.flatMap(_.allFiles))))
-    all.filter(col(CommitTime) > begin && col(CommitTime) <= endT && !col(Deleted))
+    latest(schema, slices)
+      .filter(col(CommitTime) > begin && col(CommitTime) <= endT && !col(Deleted))
   }
 
   /** CDC view of `(begin, end]`: the latest version of every key changed
@@ -193,7 +150,7 @@ class GraftReader(table: GraftTable) {
     // latest version per key over the touched groups, tombstones KEPT:
     // mergeLatest drops tombstoned keys entirely, so run the same window
     // without the tombstone filter and keep the winner row even if deleted
-    val all = readFiles(schema, slices.flatMap(_.allFiles))
+    val all = table.readStatsDf(schema, slices.flatMap(_.allFiles))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(Key), col(Partition))
       .orderBy(col(CommitTime).desc, col(Seqno).desc)
@@ -256,16 +213,7 @@ class GraftReader(table: GraftTable) {
         bloomMay(st)
     val slices = snap.slices.filter(s =>
       s.baseFile.exists(mayContain) || s.deltas.exists(mayContain))
-    val (dirty, clean) = slices.partition(_.deltas.nonEmpty)
-    val cleanDf = readBase(schema, clean.flatMap(_.baseFile))
-      .filter(col(Key).isin(ks: _*))
-    val all =
-      if (dirty.isEmpty) cleanDf
-      else cleanDf.unionByName(
-        table.mergeLatest(
-          readFiles(schema, dirty.flatMap(_.allFiles))
-            .filter(col(Key).isin(ks: _*))))
-    all.filter(!col(Deleted))
+    latest(schema, slices, _.filter(col(Key).isin(ks: _*))).filter(!col(Deleted))
   }
 
   /** Filter `incoming` down to rows whose key does NOT yet exist in the

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core._
+import graft.read.GraftFileIndex
 
 /** Meta columns stamped onto every stored row (reference analog: the five
   * `_hoodie_*` columns, model/HoodieRecord.java:37-56). They enable
@@ -280,8 +281,8 @@ class GraftTable private (
     * together — the MOR upsert path lands update deltas and fresh-group
     * bases in a single job. A group must be all-delta or all-base. */
   /** Label the jobs an action spawns (guide §1.5) — a multi-job commit
-    * is unreadable in the UI (and in ProfileQuery attribution) without
-    * them. Thread-local, restored after the action. */
+    * is unreadable in the UI without them. Thread-local, restored after
+    * the action. */
   private def withJobDesc[T](desc: String)(body: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
@@ -368,7 +369,6 @@ class GraftTable private (
         data.schema.fields.find(_.name == c).map(f => c -> f.dataType)).toMap
     val hconf = spark.sessionState.newHadoopConf()
 
-    val tWrite0 = System.nanoTime()
     val stagingCols = if (mixed) Seq(GP, GF, GD) else Seq(GP, GF)
     // Staged write runs through the direct per-group writer, NOT
     // DataFrameWriter.partitionBy: the Hadoop commit protocol costs a
@@ -393,10 +393,8 @@ class GraftTable private (
         org.apache.spark.sql.graft.GroupedFileWriter.write(
           spark, toStage, stagingCols, stagingDir.toString, config.dataFormat,
           (dataSchema: StructType) => new RowStats.Collector(types, isOrc, dataSchema)))
-    val tWrite = (System.nanoTime() - tWrite0) / 1e9
 
     // empty input stages no files at all; nothing to publish
-    val tList0 = System.nanoTime()
     if (manifest.isEmpty) {
       fs.delete(stagingDir, true)
       return Nil
@@ -504,10 +502,6 @@ class GraftTable private (
     }
     fs.delete(stagingDir, true)
     if (config.bloomIndex && out.nonEmpty) buildBlooms(out)
-    if (sys.env.contains("GRAFT_PUBLISH_DEBUG"))
-      System.err.println(f"[publish] groups=${byGroup.size} write=$tWrite%.2fs " +
-        f"tail=${(System.nanoTime() - tList0) / 1e9}%.2fs " +
-        s"mode=${if (distribute) "distributed" else "driver"}")
     out
   }
 
@@ -530,7 +524,9 @@ class GraftTable private (
       native.map(st => new Path(st.path).getName -> st.rows).toMap
     val fpp = config.bloomFpp
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    spark.read.format(config.dataFormat).load(native.map(absPath): _*)
+    val keyOnly = StructType(Seq(
+      org.apache.spark.sql.types.StructField(Key, org.apache.spark.sql.types.StringType)))
+    readStatsDf(keyOnly, native)
       .select(input_file_name().as("_g_bf"), col(Key))
       .as[(String, String)]
       .groupByKey(_._1)
@@ -709,36 +705,59 @@ class GraftTable private (
   private[graft] def absPath(st: WriteStat): String =
     if (st.external) st.path else s"$basePath/${st.path}"
 
-  /** Read a set of file-group files as one DataFrame in the table's full
-    * schema. Native files carry meta columns; external (bootstrapped)
-    * files get them stamped on the fly — key/partition from config
-    * expressions, commit time = the bootstrap instant, file id via a
-    * basename→fileId broadcast lookup. Column pruning still reaches the
-    * external scan (the stamps are narrow projections). */
+  /** The one read of commit-listed files: `stats` as one DataFrame in
+    * the table's full `schema`, every file scanned through a
+    * [[graft.read.GraftFileIndex]] relation — the file list comes from
+    * commit metadata (never a storage listing, never a path glob) and
+    * Catalyst pushdown + per-file stats pruning reach the scan. Every
+    * reader funnels here: snapshot / read-optimized / incremental / CDC
+    * reads, MOR merges, compaction, clustering and the upsert / delete
+    * re-reads.
+    *
+    * Pruning is sound under the merge window: the only filters Spark
+    * pushes below [[mergeLatest]]'s window are on its partition keys
+    * (key, partition), and every version of a key lives in files whose
+    * key range and partition cover it.
+    *
+    * Native files carry meta columns (stamped from commit metadata under
+    * virtual keys — [[stampVirtual]]); dropped partition fields are
+    * appended by the scan from typed per-group values
+    * ([[partitionedReadLayout]]). External (bootstrapped) files get
+    * their meta columns stamped on the fly ([[stampExternal]]). */
   private[graft] def readStatsDf(schema: StructType, stats: Seq[WriteStat]): DataFrame = {
     val (ext, native) = stats.partition(_.external)
     val parts = Seq(
-      if (native.isEmpty) None
-      else if (config.virtualKeys)
-        Some(stampVirtual(
-          spark.read.schema(virtualStoredSchema(schema))
-            .format(config.dataFormat).load(native.map(absPath): _*),
-          schema, native))
-      else Some(restorePartitionCols(
-        spark.read.schema(schema)
-          .format(config.dataFormat).load(native.map(absPath): _*))),
+      if (native.isEmpty) None else Some(readNative(schema, native)),
       if (ext.isEmpty) None else Some(stampExternal(schema, ext))
     ).flatten
-    parts match {
-      case Nil => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      case one :: Nil => one
-      case many => many.reduce(_.unionByName(_))
-    }
+    if (parts.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else parts.reduce(_.unionByName(_))
   }
 
-  /** Driver-side twin of [[restorePartitionCols]]'s per-row expression:
-    * path segment → read-visible partition value. */
+  private def readNative(schema: StructType, native: Seq[WriteStat]): DataFrame = {
+    // virtual-keys files hold only data columns; the meta columns are
+    // stamped after the scan, so stats pruning still runs over the files
+    val stored =
+      if (config.virtualKeys) StructType(schema.fields.filterNot(f => Meta.all.contains(f.name)))
+      else schema
+    val rel =
+      if (config.dropPartitionColumns && config.partitionFields.nonEmpty) {
+        // partition fields live only in the path: declare them as a real
+        // partition schema so the scan appends typed values from commit
+        // metadata and Catalyst's partition filters prune groups exactly
+        val (dataSchema, partSchema, rows) =
+          partitionedReadLayout(stored, native.map(_.partition))
+        GraftFileIndex.relation(spark, basePath, native, dataSchema, partSchema, rows,
+          fileFormat = config.dataFormat).select(stored.fieldNames.toSeq.map(col): _*)
+      } else GraftFileIndex.relation(spark, basePath, native, stored,
+        fileFormat = config.dataFormat, partitionFields = config.partitionFields)
+    if (config.virtualKeys) stampVirtual(rel, schema, native) else rel
+  }
+
+  /** Path segment → read-visible partition value (the inverse of
+    * [[partitionSegment]]'s encoding; null for the null-partition
+    * sentinel). */
   private def decodePartSegment(f: String, seg: String): String = {
     val raw = if (config.hiveStylePartitioning) seg.stripPrefix(s"$f=") else seg
     val decoded =
@@ -757,9 +776,9 @@ class GraftTable private (
       partitions: Seq[String]): (StructType, StructType,
         Map[String, org.apache.spark.sql.catalyst.InternalRow]) = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
-    // same zone as the write path's col.cast("string") rendering and the
-    // restorePartitionCols read path — a hardcoded zone would shift
-    // timestamp partition values between the two read paths
+    // same zone as the write path's col.cast("string") rendering — a
+    // hardcoded zone would shift timestamp partition values between the
+    // written path and the read-back value
     val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
     val pf = config.partitionFields
     // pair each found field with its position in the FULL partition spec
@@ -791,58 +810,16 @@ class GraftTable private (
     (dataSchema, StructType(partFields), rows)
   }
 
-  /** The i-th partition field's read-visible value, as an expression over
-    * the `_g_partition` meta column (uncast). */
-  private def partSegmentRestoreExpr(f: String, i: Int): Column = {
-    val seg = split(col(Partition), "/").getItem(i)
-    val noPrefix =
-      if (config.hiveStylePartitioning)
-        regexp_replace(seg, "^" + java.util.regex.Pattern.quote(f) + "=", "")
-      else seg
-    val decoded =
-      if (config.urlEncodePartitioning) call_function("url_decode", noPrefix)
-      else noPrefix
-    when(decoded === lit(NullPartitionSegment), lit(null).cast("string"))
-      .otherwise(decoded)
-  }
-
-  /** Reconstitute dropped partition-field columns from the stored
-    * `_g_partition` path (reference analog: the read side of
-    * hoodie.datasource.write.drop.partition.columns —
-    * HoodieBaseRelation's shouldExtractPartitionValuesFromPartitionPath).
-    * Files written with `dropPartitionColumns` carry the fields only in
-    * their path; the declared read schema surfaces them as nulls, which
-    * this replaces with the typed path value. Used on the plain-parquet
-    * read paths (delta merges, compaction, CDC); the [[graft.read.GraftFileIndex]]
-    * path appends the columns natively via [[partitionedReadLayout]]
-    * instead. No-op when the option is off. */
-  private[graft] def restorePartitionCols(df: DataFrame): DataFrame =
-    if (!config.dropPartitionColumns || config.partitionFields.isEmpty) df
-    else config.partitionFields.zipWithIndex.foldLeft(df) { case (d, (f, i)) =>
-      if (!d.columns.contains(f)) d
-      // try_cast: a damaged path segment degrades that row's value to
-      // null instead of failing the whole read under ANSI mode
-      else d.withColumn(f,
-        partSegmentRestoreExpr(f, i).try_cast(d.schema(f).dataType))
-    }
-
-  /** Columns physically present in a virtual-keys table's files: the
-    * declared schema minus every meta column (and minus dropped partition
-    * fields when both options combine). */
-  private[graft] def virtualStoredSchema(schema: StructType): StructType =
-    StructType(schema.fields.filterNot(f =>
-      Meta.all.contains(f.name) ||
-        (config.dropPartitionColumns && config.partitionFields.contains(f.name))))
-
   /** Reconstitute EVERY meta column for a virtual-keys read (reference
     * analog: hoodie.populate.meta.fields=false + virtual-key generation,
     * HoodieTableConfig.java:159): partition/commit-time/file-id are
     * per-file constants from commit metadata (stamped via an
     * input_file_name lookup, like the bootstrap path), the key comes from
     * the key-generator expression, and rows are never tombstoned
-    * (append-only contract). `df` must cover [[virtualStoredSchema]];
-    * output matches `schema`'s columns. */
-  private[graft] def stampVirtual(
+    * (append-only contract). `df` holds `schema`'s data columns (dropped
+    * partition fields already appended by the scan); output matches
+    * `schema`'s columns. */
+  private def stampVirtual(
       df: DataFrame, schema: StructType, native: Seq[WriteStat]): DataFrame = {
     import spark.implicits._
     // per-file constants ride a BROADCAST join keyed on the file name —
@@ -857,21 +834,10 @@ class GraftTable private (
         .stripPrefix(s"${st.fileId}_")
       (name, st.fileId, commit, st.partition)
     }.toDF("_g_vf_name", "_g_vf_file", "_g_vf_commit", "_g_vf_part")
-    val withPart = df
+    df
       .withColumn("_g_vf_name", regexp_extract(input_file_name(), "[^/]+$", 0))
       .join(broadcast(info), "_g_vf_name")
       .withColumn(Partition, col("_g_vf_part"))
-    // dropped partition fields not already appended by the scan derive
-    // from the freshly stamped partition path
-    val withFields =
-      if (!config.dropPartitionColumns) withPart
-      else config.partitionFields.zipWithIndex.foldLeft(withPart) {
-        case (d, (f, i)) =>
-          if (d.columns.contains(f) || !schema.fieldNames.contains(f)) d
-          else d.withColumn(f,
-            partSegmentRestoreExpr(f, i).try_cast(schema(f).dataType))
-      }
-    withFields
       .withColumn(Key, keyExpr)
       .withColumn(CommitTime, col("_g_vf_commit"))
       .withColumn(Seqno, concat(col(CommitTime), lit("_"), lpad(lit("0"), 20, "0")))
@@ -886,12 +852,16 @@ class GraftTable private (
   private[graft] def keyValueExpr: Column = keyExpr
   private[graft] def partitionValueExpr: Column = partitionExpr
 
+  /** Bootstrapped (zero-copy external) files in the table's schema: key
+    * / partition from the config expressions, commit time = the
+    * bootstrap instant, file id via a basename→fileId lookup. Column
+    * pruning still reaches the scan (the stamps are narrow projections). */
   private def stampExternal(schema: StructType, ext: Seq[WriteStat]): DataFrame = {
     val t = bootstrapInstant.getOrElse("00000000000000000")
     val dataSchema = StructType(schema.fields.filterNot(f => Meta.all.contains(f.name)))
     val mapping = ext.map(st => new Path(st.path).getName -> st.fileId).toMap
-    spark.read.schema(dataSchema)
-      .format(config.dataFormat).load(ext.map(_.path): _*)
+    // external paths are absolute, so they resolve as-is against the root
+    GraftFileIndex.relation(spark, basePath, ext, dataSchema, fileFormat = config.dataFormat)
       .withColumn(Key, keyExpr)
       // partition columns live IN the external files (bootstrap
       // contract), so the path value derives row-wise like any write
@@ -966,8 +936,6 @@ class GraftTable private (
       // these groups) — the staging shuffle's width cap for update-paths
       stats.map(_.fileId).distinct.size)
   }
-
-  private def abs(st: WriteStat): String = absPath(st)
 
   /** (candidate files, files kept) of the last bloom probe — test/debug
     * visibility into pruning effectiveness. */

@@ -36,69 +36,6 @@ import org.apache.spark.util.SerializableConfiguration
   * runs), written straight to the final staged name. */
 object GroupedFileWriter {
 
-  /** Phase-split microbenchmark: write `n` copies of `rows` as separate
-    * tiny parquet files on the DRIVER, timing newInstance / write / close
-    * separately. Experiment tooling only. */
-  def microbench(
-      spark: org.apache.spark.sql.SparkSession,
-      sample: DataFrame,
-      destDir: String,
-      n: Int): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val dataSchema = sample.schema
-    val rows = sample.queryExecution.toRdd.collect().map(_.copy())
-    val job = Job.getInstance(classic.sessionState.newHadoopConf())
-    val factory = new ParquetFileFormat().prepareWrite(classic, job, Map.empty, dataSchema)
-    val tac = new TaskAttemptContextImpl(job.getConfiguration,
-      new TaskAttemptID(new TaskID(new JobID("graftmb", 0), TaskType.MAP, 0), 0))
-    val ext = factory.getFileExtension(tac)
-    // poor-man's profiler: sample this thread's stack every 2 ms during
-    // the open phase and histogram the deepest interesting frame
-    val hist = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val target = Thread.currentThread()
-    @volatile var sampling = true
-    val exemplar = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val sampler = new Thread(() => {
-      while (sampling) {
-        val st = target.getStackTrace
-        if (st.exists(_.getMethodName == "runCommand") && exemplar.get == null)
-          exemplar.set(st.take(28).mkString("\n    "))
-        val frame = st.find(f =>
-          f.getClassName.startsWith("org.apache.parquet") ||
-          f.getClassName.startsWith("org.apache.hadoop") ||
-          f.getClassName.startsWith("org.xerial") ||
-          f.getClassName.contains("Codec") ||
-          f.getClassName.contains("parquet"))
-          .map(f => s"${f.getClassName}.${f.getMethodName}")
-          .getOrElse(st.drop(2).headOption.map(f => s"${f.getClassName}.${f.getMethodName}").getOrElse("?"))
-        hist.merge(frame, 1, (a, b) => a + b)
-        Thread.sleep(2)
-      }
-    })
-    sampler.setDaemon(true)
-    sampler.start()
-    var tOpen = 0L; var tWrite = 0L; var tClose = 0L
-    (0 until n).foreach { i =>
-      val p = new Path(destDir, f"mb-$i%05d$ext")
-      val t0 = System.nanoTime()
-      val w = factory.newInstance(p.toString, dataSchema, tac)
-      val t1 = System.nanoTime()
-      rows.foreach(w.write)
-      val t2 = System.nanoTime()
-      w.close()
-      val t3 = System.nanoTime()
-      tOpen += t1 - t0; tWrite += t2 - t1; tClose += t3 - t2
-    }
-    sampling = false
-    println(f"[scratch]   microbench n=$n rows=${rows.length}: " +
-      f"open=${tOpen / 1e9}%.2fs write=${tWrite / 1e9}%.2fs close=${tClose / 1e9}%.2fs")
-    Option(exemplar.get).foreach(e => println(s"[scratch]     exemplar stack:\n    $e"))
-    import scala.jdk.CollectionConverters._
-    hist.asScala.toSeq.sortBy(-_._2).take(12).foreach { case (f, c) =>
-      println(s"[scratch]     sample $c  $f")
-    }
-  }
-
   /** Per-file accounting hook for [[write]]: observes every (projected)
     * row as the task streams it into the current file, then produces the
     * file's manifest value after the file is complete. One instance per
