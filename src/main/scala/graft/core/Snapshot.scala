@@ -39,6 +39,11 @@ object Snapshot {
       FileSlice(partition, fileId, base.map(_._2), deltas.map(_._2))
   }
 
+  /** Test probe: metadata files resolutions have read — the checkpoint,
+    * the archived gap's instants and the active instants each replays (a
+    * memo hit reads none). */
+  private[graft] val resolveMetaReads = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** Memo of the last few resolutions: between commits every read and
     * every write resolves the SAME state, so a repeated resolve must be
     * O(1), not a re-fold of a million file groups. The key pins the
@@ -131,6 +136,7 @@ object Snapshot {
             Action.dataActions(i.action) && i.time > cpTime && i.time <= bound
           }
       else Nil
+    resolveMetaReads.addAndGet(cp.size + gap.size + visible.size)
     var groups = Map.empty[(String, String), GroupState]
     cp.toSeq.flatMap(_.slices).foreach { s =>
       groups += (s.partition, s.fileId) -> GroupState(

@@ -57,9 +57,7 @@ class GraftFileIndex(
       new Path(rootPath, st.path))
 
   /** Entries bucketed by partition path, built once per index (list
-    * order preserved inside a bucket). Within a bucket every file
-    * carries the SAME partition-field values, so a partition-only
-    * predicate is decided by any one file's stats — the bucket head's. */
+    * order preserved inside a bucket). */
   private lazy val byPartition: Seq[(String, Seq[WriteStat])] = {
     // snapshot slices arrive partition-SORTED (Snapshot.resolve sorts by
     // (partition, fileId) and the read path's filters preserve order),
@@ -92,11 +90,19 @@ class GraftFileIndex(
     }
   }
 
+  /** Per bucket, one stats entry covering EVERY file in it: each
+    * partition field's [min, max] and null count over all the bucket's
+    * files. One file's stats do not cover its bucket: sanitising can map
+    * several partition values to one path (`a/b` and `a_b` both land in
+    * `a_b`). Built once per index, so a query still decides a bucket
+    * with one evaluation. */
+  private lazy val bucketCovers: Seq[(WriteStat, Seq[WriteStat])] =
+    byPartition.map { case (_, es) => (StatsSkipping.cover(es, partitionFields, schema), es) }
+
   private val partitionFieldSet = partitionFields.toSet
 
   /** A filter decidable per PARTITION: deterministic and touching only
-    * partition fields (their per-file min==max==the partition value, so
-    * stats evaluation on one file of the bucket decides the bucket). */
+    * partition fields, so the bucket's covering stats decide it. */
   private def partitionOnly(f: Expression): Boolean = {
     val refs = f.references.map(_.name).toSet
     refs.nonEmpty && refs.subsetOf(partitionFieldSet) && f.deterministic &&
@@ -146,11 +152,8 @@ class GraftFileIndex(
       val (partPreds, filePreds) = filters.partition(partitionOnly)
       val candidates =
         if (partPreds.isEmpty) files
-        else byPartition.withFilter { case (_, es) =>
-          // representative file: the first carrying column stats (a
-          // stats-less representative keeps the bucket — conservative)
-          val rep = es.find(_.columnStats.nonEmpty).getOrElse(es.head)
-          partPreds.forall(f => StatsSkipping.mayMatch(f, rep, schema))
+        else bucketCovers.withFilter { case (cover, _) =>
+          partPreds.forall(f => StatsSkipping.mayMatch(f, cover, schema))
         }.flatMap(_._2)
       val kept = candidates.filter { st =>
         filePreds.forall(f => StatsSkipping.mayMatch(f, st, schema))
@@ -308,6 +311,63 @@ object StatsSkipping {
       case _                  => true
     }
 
+  /** One stats entry whose `fields` stats cover every file of `files`
+    * (min of mins, max of maxes, summed null and row counts). A field
+    * some file has no stats for, or whose type has no order here, is
+    * left out: the bucket is then kept, never pruned. */
+  private[read] def cover(files: Seq[WriteStat], fields: Seq[String],
+      schema: StructType): WriteStat = {
+    // x or y, whichever is the lower (upper) bound; None when unordered
+    def pick(dt: DataType, x: String, y: String, takeLower: Boolean): Option[String] =
+      if (x == null || x == y) Some(y)
+      else if (y == null) Some(x)
+      else scala.util.Try(internal(dt, y)).toOption
+        .flatMap(compare(dt, x, _))
+        .map(c => if ((c <= 0) == takeLower) x else y)
+    val covered = fields.flatMap { f =>
+      schema.fields.find(_.name == f).flatMap { sf =>
+        // one pass, allocation-free while files repeat the bounds so far
+        // (the common case: one value per partition path)
+        val it = files.iterator
+        var lo, hi: String = null
+        var nulls = 0L
+        var ok = true
+        while (ok && it.hasNext) {
+          val cs = it.next().columnStats.getOrElse(f, null)
+          if (cs == null) ok = false
+          else {
+            nulls += cs.nullCount
+            if (cs.min != lo || cs.max != hi) {
+              val l = pick(sf.dataType, lo, cs.min, takeLower = true)
+              val h = pick(sf.dataType, hi, cs.max, takeLower = false)
+              ok = l.isDefined && h.isDefined
+              lo = l.orNull; hi = h.orNull
+            }
+          }
+        }
+        Option.when(ok)(f -> ColStat(lo, hi, nulls))
+      }
+    }
+    var rows = 0L
+    files.foreach(rows += _.rows)
+    files.head.copy(rows = rows, columnStats = covered.toMap)
+  }
+
+  /** A stat bound string as the Catalyst internal value [[compare]]
+    * takes for a literal of type `dt`. */
+  private def internal(dt: DataType, s: String): Any = dt match {
+    case _: TimestampType | _: TimestampNTZType => micros(s)
+    case DateType    => java.time.LocalDate.parse(s).toEpochDay.toInt
+    case BooleanType => s.toBoolean
+    case _           => s
+  }
+
+  /** Micros since epoch of a session-formatted "yyyy-MM-dd HH:mm:ss[.f]". */
+  private def micros(s: String): Long = {
+    val ldt = java.time.LocalDateTime.parse(s.replace(' ', 'T'))
+    ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L
+  }
+
   /** Column name behind an attribute in either resolved or parsed form. */
   private def attrName(e: Expression): Option[String] = e match {
     case a: AttributeReference  => Some(a.name)
@@ -367,11 +427,7 @@ object StatsSkipping {
       case StringType =>
         Some(statStr.compareTo(lit.toString))
       case _: TimestampType | _: TimestampNTZType =>
-        // stat: session-formatted "yyyy-MM-dd HH:mm:ss[.f]"; literal: micros
-        val ldt = java.time.LocalDateTime.parse(statStr.replace(' ', 'T'))
-        val micros = ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-          ldt.getNano / 1000L
-        Some(java.lang.Long.compare(micros, lit.asInstanceOf[Long]))
+        Some(java.lang.Long.compare(micros(statStr), lit.asInstanceOf[Long]))
       case DateType =>
         val days = java.time.LocalDate.parse(statStr).toEpochDay
         Some(java.lang.Long.compare(days, lit.asInstanceOf[Int].toLong))

@@ -59,6 +59,8 @@ class GraftTable private (
 
   import Meta._
 
+  graft.Tables.warnIfCodegenCacheSmall(spark)
+
   lazy val config: TableConfig = timeline.config
   private def isMor: Boolean = config.tableType == TableType.MOR
 
@@ -1093,7 +1095,7 @@ class GraftTable private (
           // data commit is already durable — the caller would read it
           // as "write failed" and retry into a double-insert
           case scala.util.control.NonFatal(e) =>
-            System.err.println(
+            GraftTable.log.warn(
               s"[graft] inline compaction failed (commit is durable; " +
                 s"re-attempted next commit): ${e.getClass.getName}: ${e.getMessage}")
         }
@@ -1109,7 +1111,7 @@ class GraftTable private (
         svc.archive(c.autoArchiveMinCommits, c.autoArchiveMaxCommits)
     } catch {
       case scala.util.control.NonFatal(e) =>
-        System.err.println(
+        GraftTable.log.warn(
           s"[graft] inline clean/archive failed (commit is durable; " +
             s"retried next commit): ${e.getClass.getName}: ${e.getMessage}")
     }
@@ -1174,11 +1176,11 @@ class GraftTable private (
     try {
       val cleaned = graft.services.TableServices(this).rollbackFailedWrites()
       if (cleaned.nonEmpty)
-        System.err.println(
+        GraftTable.log.warn(
           s"[graft] rolled back crashed write instants: ${cleaned.mkString(", ")}")
     } catch {
       case scala.util.control.NonFatal(e) =>
-        System.err.println(
+        GraftTable.log.warn(
           s"[graft] failed-write cleanup failed (write proceeds; retried " +
             s"next write): ${e.getClass.getName}: ${e.getMessage}")
     }
@@ -1719,6 +1721,7 @@ object DataTypeJson {
 }
 
 object GraftTable {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftTable])
 
   /** Row count + per-column [min,max,nullCount] for one data file, read
     * from its FOOTER metadata only (parquet row groups / ORC file

@@ -202,4 +202,35 @@ class ReadPathSpec extends AnyFunSuite {
     assertGraftScansOnly(df, "bootstrapped read")
     assert(df.count() == 181)
   }
+
+  // ---------------------------------------------------------------------
+  // partition-only predicates over a partition path shared by values
+  // ---------------------------------------------------------------------
+
+  for (tt <- Seq(TableType.COW, TableType.MOR))
+    test(s"$tt: partition predicates keep every value sanitised into one path") {
+      import org.apache.spark.sql.functions.col
+      // `a/b` and `a_b` both sanitise to the partition path `a_b`
+      val tbl = GraftTable.create(spark, tmp(), TableConfig(
+        name = "shared", tableType = tt, keyFields = Seq("id"),
+        partitionFields = Seq("p"), orderingField = "ts", targetFileRows = 4,
+        statsColumns = Seq("p")))
+      val first = (1 to 6).map(i => (i.toLong, if (i % 2 == 0) "a/b" else "c", s"v$i", 1L))
+      val second = (7 to 12).map(i => (i.toLong, if (i % 2 == 0) "a_b" else "b", s"v$i", 1L))
+      tbl.bulkInsert(toDf(first))
+      tbl.upsert(toDf(second))
+      val paths = Snapshot.resolve(tbl.timeline).slices.map(_.partition).toSet
+      assert(paths == Set("a_b", "b", "c"), s"partition paths: $paths")
+      val r = GraftReader(tbl)
+      val all = first ++ second
+      for ((pred, keep) <- Seq[(org.apache.spark.sql.Column, String => Boolean)](
+          (col("p") === "a_b", _ == "a_b"),
+          (col("p") === "a/b", _ == "a/b"),
+          (col("p").isin("a_b", "c"), Set("a_b", "c")),
+          (col("p") > "a0", _ > "a0"),
+          (col("p") < "a_", _ < "a_"))) {
+        assert(collected(r.dataOnly(r.snapshot()).filter(pred)) ==
+          all.filter(x => keep(x._2)).sortBy(_._1), s"rows under $pred")
+      }
+    }
 }
