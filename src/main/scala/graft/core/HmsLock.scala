@@ -31,8 +31,7 @@ import org.apache.hadoop.hive.metastore.api.{
   * commit point: a hold the metastore no longer carries (reaped by the
   * lock timeout, or released by an operator) answers
   * NoSuchLockException and the writer aborts instead of publishing
-  * blind — the same contract as the tcp provider's VERIFY and the zk
-  * provider's czxid marker.
+  * blind — the same contract as the zk provider's czxid marker.
   *
   * The metastore CLIENT is long-lived (one per connect string per JVM,
   * the ZkLockProvider.cached shape); HiveMetaStoreClient is not
@@ -76,8 +75,8 @@ class HmsLockProvider(connect: String, key: String) extends LockProvider {
     * `hive.txn.timeout` (default 300 s), and a distributed publish of a
     * 100k-file commit can easily outlive that — without a keepalive the
     * hold is reaped mid-write and the commit systematically aborts at
-    * the fence check. Same shape as the tcp provider's per-hold
-    * keepalive (LockServer.scala). A failed beat is left to the COMMIT
+    * the fence check. Same shape as a ZooKeeper client's session
+    * heartbeat. A failed beat is left to the COMMIT
     * POINT fence check — the keepalive must never unlock or abort on
     * its own (a transient blip would kill a healthy commit). */
   private def startKeepalive(): Unit = {

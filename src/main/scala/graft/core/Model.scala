@@ -203,22 +203,12 @@ case class TableConfig(
       * contract: reject the write (Avro compatibility gate,
       * TableSchemaResolver.isSchemaCompatible :337-345). */
     strictSchema: Boolean = false,
-    /** where data-file publication (move + footer-stats) runs: "driver"
-      * (thread pool on the driver — fine for small commits on a
-      * rename-cheap store), "distributed" (a Spark job over the staged
-      * files — the only shape that survives 100k-file commits, and the
-      * only shape where `put`-profile copy BYTES stay off the driver),
-      * or "auto" (default): distribute when the commit has more groups
-      * than the driver pool width, or when the `put` profile would
-      * otherwise stream a non-trivial byte volume through the driver.
-      * Reference analog: per-file accounting is executor-side there too
-      * (write handles populate HoodieWriteStat,
-      * io/HoodieCreateHandle.java:52). Old table.json → null = auto. */
-    publishMode: String = "auto",
     /** mutual-exclusion provider for OCC commit publication: "file"
-      * (atomic create-if-absent lock file) or "inprocess" (JVM-wide
-      * map — all writers share a driver). The seam where a ZK/Hive
-      * binding plugs in (reference analog: hoodie.write.lock.provider,
+      * (atomic create-if-absent lock file), "inprocess" (JVM-wide
+      * map — all writers share a driver), "zk:<connectString>"
+      * (ZooKeeper via Curator) or "hms:<connect>" (the Hive
+      * metastore's lock manager); see [[TimelineLock.providerFor]]
+      * (reference analog: hoodie.write.lock.provider,
       * ZookeeperBasedLockProvider.java:55 /
       * InProcessLockProvider.java). */
     lockProvider: String = "file",

@@ -11,11 +11,12 @@ trait LockProvider {
   def unlock(): Unit
   def describe: String
   /** Fence token minted with the CURRENT hold, if the provider fences.
-    * Tokens are unique per hold; the tcp and in-process providers mint
-    * them from one monotonic counter (a later holder's token is strictly
-    * newer), while the file provider's are unique-but-unordered across
-    * processes — [[verifyFence]] compares by EQUALITY, so correctness
-    * never depends on the ordering. Recorded in the commit payload. */
+    * Tokens are unique per hold; the zk provider mints them from the
+    * marker's czxid and the in-process provider from one monotonic
+    * counter (a later holder's token is strictly newer), while the file
+    * provider's are unique-but-unordered across processes —
+    * [[verifyFence]] compares by EQUALITY, so correctness never depends
+    * on the ordering. Recorded in the commit payload. */
   def fenceToken: Option[Long] = None
   /** True iff this holder still owns the lock under the SAME token
     * minted at acquire — called at the commit point, immediately before
@@ -169,8 +170,8 @@ class TimelineLock(
 
   def withLock[T](f: => T): T =
     // close() in the OUTER finally: a timed-out acquire() has still
-    // opened provider resources (e.g. the tcp session) that must not
-    // leak on the failure path
+    // opened provider resources (e.g. a dedicated zk client or an hms
+    // connection) that must not leak on the failure path
     try {
       acquire()
       try f finally provider.unlock()
@@ -200,10 +201,6 @@ object TimelineLock {
   val LockFile = ".lock"
   val File = "file"
   val InProcess = "inprocess"
-  /** `tcp:<host>:<port>` — the out-of-process [[LockServer]] binding
-    * (the ZK-analog: exclusion state lives in an external service,
-    * session loss releases the lock). */
-  val TcpPrefix = "tcp:"
   /** `zk:<connectString>` — the REAL ZooKeeper binding via Curator
     * ([[ZkLockProvider]]); connectString as ZooKeeper takes it
     * (host:port[,host:port...][/chroot]). */
@@ -222,13 +219,6 @@ object TimelineLock {
     n match {
       case File      => new FileLockProvider(timeline, staleMs)
       case InProcess => new InProcessLockProvider(timeline.basePath)
-      case tcp if tcp.startsWith(TcpPrefix) =>
-        tcp.stripPrefix(TcpPrefix).split(":", 2) match {
-          case Array(host, port) if host.nonEmpty && port.forall(_.isDigit) && port.nonEmpty =>
-            new TcpLockProvider(host, port.toInt, timeline.basePath)
-          case _ => throw new IllegalArgumentException(
-            s"malformed lockProvider '$tcp' (expected 'tcp:<host>:<port>')")
-        }
       case zk if zk.startsWith(ZkPrefix) =>
         val connect = zk.stripPrefix(ZkPrefix).trim
         if (connect.isEmpty) throw new IllegalArgumentException(
@@ -243,8 +233,8 @@ object TimelineLock {
         new HmsLockProvider(connect, timeline.basePath)
       case other => throw new IllegalArgumentException(
         s"unknown lockProvider '$other' " +
-          s"(expected '$File', '$InProcess', '$TcpPrefix<host>:<port>', " +
-          s"'$ZkPrefix<connectString>' or '$HmsPrefix<connect>')")
+          s"(expected '$File', '$InProcess', '$ZkPrefix<connectString>' " +
+          s"or '$HmsPrefix<connect>')")
     }
   }
 }

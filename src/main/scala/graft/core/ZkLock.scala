@@ -23,8 +23,8 @@ import org.apache.zookeeper.CreateMode
   * [[verifyFence]] at the commit point re-reads the marker: a holder
   * whose session expired mid-critical-section (its ephemerals gone, the
   * mutex possibly in a peer's hands) sees the marker missing and aborts
-  * instead of publishing blind — the same contract the tcp provider's
-  * VERIFY gives, here carried by ZK's own session machinery.
+  * instead of publishing blind; ZK's own session machinery carries the
+  * loss signal.
   *
   * One provider instance per lock scope (TimelineLock news one per
   * commit), but the Curator CLIENT is long-lived: the production path

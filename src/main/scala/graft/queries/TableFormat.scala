@@ -963,8 +963,9 @@ object TableFormat {
     // ---- q57 under the OBJECT-STORE commit profile: same many-group
     //      bulk_insert, but every data-file "move" is a copy (no atomic
     //      rename) and exclusivity is a conditional write. Publication
-    //      runs as a distributed Spark job (publishMode=auto resolves to
-    //      distributed here), so the copy BYTES never transit the driver
+    //      runs as a distributed Spark job (the commit has more groups
+    //      than the driver publish pool), so the copy BYTES never transit
+    //      the driver
     //      — this is the profile's perf gate next to q118's sf0.01
     //      correctness gate
     "q180_publish_put_profile" -> ((
@@ -2315,28 +2316,11 @@ object TableFormat {
                CAST(sum(floor(price * 100)) AS BIGINT) AS price_c
         FROM final_state GROUP BY o_orderpriority ORDER BY o_orderpriority"""))),
 
-    // ---- the same OCC race with mutual exclusion served by a real
-    //      OUT-OF-PROCESS lock service over TCP (the ZK stand-in:
-    //      exclusion state lives outside every writer; reference analog:
-    //      ZookeeperBasedLockProvider.java:55) — combined with the
-    //      object-store commit profile, i.e. the full production
-    //      multi-writer posture
-    "q186_occ_conflict_tcp_lock" -> ((
-      (s: SparkSession, d: String) => {
-        val srv = new graft.core.LockServer()
-        val port = srv.start()
-        try occRace(s, d, c => c.copy(
-          commitStore = graft.core.CommitStore.Put,
-          lockProvider = s"tcp:127.0.0.1:$port"))
-        finally srv.stop()
-      },
-      Some(OccRaceSql))),
-
     // ---- OCC under the REAL ZooKeeper lock provider (Curator
     //      InterProcessMutex + fence markers against an in-process ZK
     //      server — the server classes ship in the zookeeper jar): the
-    //      same three-writer race as q64/q186 through the production
-    //      lock stack, object-store commit profile
+    //      same three-writer race as q64 through an out-of-process lock
+    //      service, object-store commit profile
     "q199_occ_conflict_zk_lock" -> ((
       (s: SparkSession, d: String) => {
         val (connect, stop) = graft.core.EmbeddedZk.start()
@@ -2384,29 +2368,31 @@ object TableFormat {
     //      fence token minted at ACQUIRE and verified at the commit point
     //      — the stale writer ABORTS with a clean rollback, a fresh
     //      writer lands the same change, and the completed instant
-    //      records the fence it committed under. The reference's ZK
-    //      provider leaves this window open
+    //      records the fence it committed under. Runs under the real
+    //      ZooKeeper provider against an in-process ZK server. The
+    //      reference's ZK provider leaves this window open
     //      (ZookeeperBasedLockProvider.java:55).
     "q189_fenced_commit_session_loss" -> ((
       (s: SparkSession, d: String) => {
         val orders = graft.Tables.t(s, d, "orders")
-        val srv = new graft.core.LockServer()
-        val port = srv.start()
+        val (connect, stop) = graft.core.EmbeddedZk.start()
         try {
           val tbl = GraftTable.create(s, freshDir(),
             cfg("orders_fence", TableType.COW).copy(
               occ = true, commitStore = graft.core.CommitStore.Put,
-              lockProvider = s"tcp:127.0.0.1:$port"))
+              lockProvider = s"zk:$connect"))
           tbl.bulkInsert(orders.filter(col("o_orderkey") % 10 < 8))
           val batch = orders.filter(col("o_orderkey") % 10 === 6)
             .withColumn("o_totalprice", col("o_totalprice") + 1000)
-          // fault injection: every lock session is hard-dropped at the
-          // commit point, AFTER this writer's conflict check passed
-          tbl.onBeforeComplete = () => srv.killSessions()
+          // fault injection: the writer's ZK session is expired
+          // server-side at the commit point, AFTER its conflict check
+          // passed — its lock and fence marker vanish with the session
+          tbl.onBeforeComplete = () => graft.core.EmbeddedZk.killSession(
+            graft.core.ZkLockProvider.cachedClient(connect), connect)
           val staleAborted =
             try { tbl.upsert(batch); false }
             catch { case _: graft.core.LockSessionLostException => true }
-          tbl.onBeforeComplete = () => ()
+          finally tbl.onBeforeComplete = () => ()
           require(staleAborted,
             "a writer whose lock session dropped mid-commit must abort " +
               "at the fence check, not complete")
@@ -2420,7 +2406,10 @@ object TableFormat {
           val r = GraftReader(tbl)
           summarize(r.dataOnly(r.snapshot())
             .withColumnRenamed("o_totalprice", "price"))
-        } finally srv.stop()
+        } finally {
+          stop()
+          graft.core.ZkLockProvider.closeCached(connect)
+        }
       },
       Some(OccRaceSql))),
 

@@ -40,7 +40,8 @@ import graft.write.GraftTable
   *   virtual.keys             store zero meta columns (append-only COW)
   *   occ                      multi-writer optimistic concurrency
   *   commit.store             rename (default) | put — storage profile
-  *   lock.provider            file (default) | inprocess
+  *   lock.provider            file (default) | inprocess | zk:<connect> |
+  *                            hms:<connect>
   *   failed.writes.policy     auto (default) | eager | lazy | none
   *   heartbeat.ttl.ms         lazy-policy heartbeat expiry (0 = default)
   */
@@ -202,7 +203,6 @@ class GraftDataSource
         commitStore = parameters.getOrElse("commit.store", "rename"),
         baseFormat = parameters.getOrElse("base.format", "parquet"),
         strictSchema = parameters.getOrElse("strict.schema", "false").toBoolean,
-        publishMode = parameters.getOrElse("publish.mode", "auto"),
         lockProvider = parameters.getOrElse("lock.provider", "file"),
         failedWritesPolicy =
           parameters.getOrElse("failed.writes.policy", "auto"),

@@ -428,25 +428,18 @@ class GraftTable private (
       Move(parts.head, dest, part, fileId, isDelta, rel)
     }
 
-    // Publication mode. With per-file accounting already collected by the
-    // staged write, publish is PURE MOVES (profile-dependent: rename, or
-    // a byte copy under `put` — see graft.core.CommitStore): at 100k-file
-    // commits a driver-side loop is still the publish tail, and under
-    // `put` the commit's whole data volume would transit one JVM. "auto"
-    // keeps small rename-profile commits on the cheap driver pool and
-    // distributes everything else as a Spark job.
-    val mode = Option(config.publishMode).map(_.trim.toLowerCase)
-      .filter(_.nonEmpty).getOrElse("auto")
-    val distribute = mode match {
-      case "driver"      => false
-      case "distributed" => true
-      case "auto" =>
-        moves.size > GraftTable.PublishThreads ||
-          (timeline.commitStore.name == CommitStore.Put &&
-            manifest.map(_._2._2).sum > GraftTable.PutDriverCopyMaxBytes)
-      case other => throw new IllegalArgumentException(
-        s"unknown publishMode '$other' (expected auto|driver|distributed)")
-    }
+    // Publication vehicle. With per-file accounting already collected by
+    // the staged write, publish is PURE MOVES (profile-dependent: rename,
+    // or a byte copy under `put` — see graft.core.CommitStore): at
+    // 100k-file commits a driver-side loop is still the publish tail, and
+    // under `put` the commit's whole data volume would transit one JVM.
+    // Small commits stay on the cheap driver pool; a commit wider than
+    // the pool, or a `put` commit with a non-trivial byte volume, is
+    // distributed as a Spark job.
+    val distribute = GraftTable.publishDistributedOverride.getOrElse(
+      moves.size > GraftTable.PublishThreads ||
+        (timeline.commitStore.name == CommitStore.Put &&
+          manifest.map(_._2._2).sum > GraftTable.PutDriverCopyMaxBytes))
     // one mkdirs per destination PARTITION directory (not per file):
     // on a real store every mkdirs is a metadata RPC
     moves.map(_.dest.getParent).distinct.foreach(fs.mkdirs(_))
@@ -1938,11 +1931,26 @@ object GraftTable {
   /** Driver-side parallelism for publish renames. */
   private[write] val PublishThreads = 32
 
-  /** Under `publishMode=auto` + the `put` commit-store profile, commits
-    * staging more than this many bytes publish via the distributed job
+  /** Under the `put` commit-store profile, commits staging more than
+    * this many bytes publish via the distributed job
     * (a `put` "move" is a byte copy — above this, those bytes must not
     * transit the driver). */
   private[write] val PutDriverCopyMaxBytes = 16L * 1024 * 1024
+
+  /** Test seam: invoked after EACH file lands at its published name
+    * (both publish paths). Lets a chaos spec crash a publish after K of
+    * N moves — the messiest real-world wreckage: files already at final
+    * names with no commit — and assert the failed-write reaper reclaims
+    * them. No-op in production; in `local` mode executor threads share
+    * the JVM, so the distributed path sees the injected hook too. */
+  @volatile private[graft] var onPublishedMove: String => Unit = _ => ()
+
+  /** Test seam: `Some(true)` routes every publish through the
+    * distributed job, `Some(false)` through the driver pool; `None`
+    * (production) picks from the commit's group count and byte volume.
+    * Lets a chaos spec reach partial executor-side moves on small
+    * commits, and a scale spec compare both vehicles at one size. */
+  @volatile private[graft] var publishDistributedOverride: Option[Boolean] = None
 
   /** Executor-side publication: one Spark job moves every staged file to
     * its published name (per the commit-store profile). Per-file
@@ -1952,14 +1960,6 @@ object GraftTable {
     * with the cluster instead of serializing on the driver publish pool
     * (reference analog: HoodieWriteStat is populated executor-side by
     * the write handles, io/HoodieCreateHandle.java:52-210). */
-  /** Test seam: invoked after EACH file lands at its published name
-    * (both publish paths). Lets a chaos spec crash a publish after K of
-    * N moves — the messiest real-world wreckage: files already at final
-    * names with no commit — and assert the failed-write reaper reclaims
-    * them. No-op in production; in `local` mode executor threads share
-    * the JVM, so the distributed path sees the injected hook too. */
-  @volatile private[graft] var onPublishedMove: String => Unit = _ => ()
-
   private[write] def publishDistributed(
       spark: SparkSession,
       moves: Seq[(String, String)],
@@ -2008,10 +2008,6 @@ object GraftTable {
         .contains(config.failedWritesPolicy),
       s"unknown failedWritesPolicy '${config.failedWritesPolicy}' " +
         "(expected 'auto', 'eager', 'lazy' or 'none')")
-    require(Seq(null, "", "auto", "driver", "distributed")
-        .contains(config.publishMode),
-      s"unknown publishMode '${config.publishMode}' " +
-        "(expected 'auto', 'driver' or 'distributed')")
     require(Seq(null, "", "parquet", "orc").contains(config.baseFormat),
       s"unknown baseFormat '${config.baseFormat}' " +
         "(expected 'parquet' or 'orc')")

@@ -48,22 +48,6 @@ object GroupedFileWriter {
     def finish(path: Path, conf: org.apache.hadoop.conf.Configuration): S
   }
 
-  /** Layout-only form of [[write]] for callers that don't need the
-    * manifest (experiments, layout tests). */
-  def write(
-      spark: org.apache.spark.sql.SparkSession,
-      df: DataFrame,
-      groupCols: Seq[String],
-      destDir: String,
-      format: String): Unit = {
-    val _ = write[Int](spark, df, groupCols, destDir, format,
-      _ => new RowFileCollector[Int] {
-        override def reset(): Unit = ()
-        override def update(row: org.apache.spark.sql.catalyst.InternalRow): Unit = ()
-        override def finish(path: Path, conf: org.apache.hadoop.conf.Configuration): Int = 0
-      })
-  }
-
   /** Write `df` (already clustered by `groupCols` within partitions)
     * under `destDir` as `<gp>=<v>/.../part-<pid>.<ext>` files, one per
     * distinct group-column combination per task, and return the staged

@@ -21,15 +21,14 @@ class ArchiveOccSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false"))
     .getOrCreate()
 
-  // shared out-of-process lock service for the tcp-provider profiles
-  // (the ZK-analog: exclusion state lives outside every writer JVM)
-  lazy val lockServer: LockServer = { val s = new LockServer(); s.start(); s }
+  // shared in-process ZooKeeper server for the zk-provider profiles
+  // (exclusion state lives outside every writer)
   lazy val zk: (String, () => Unit) = EmbeddedZk.start()
   def zkConnect: String = zk._1
 
   override def afterAll(): Unit = {
     spark.stop()
-    lockServer.stop()
+    ZkLockProvider.closeCached(zkConnect)
     zk._2()
   }
 
@@ -46,20 +45,6 @@ class ArchiveOccSpec extends AnyFunSuite with BeforeAndAfterAll {
       ok = cond
     }
     ok
-  }
-
-  /** Bounded line read from a child process's stdout: a wedged or
-    * slow-starting child must fail the assertion with a diagnosis, not
-    * hang the whole suite on an unbounded readLine. */
-  def readLineWithin(in: java.io.BufferedReader, child: Process,
-      timeoutMs: Long = 60000): String = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (!in.ready() && System.currentTimeMillis() < deadline) {
-      if (!child.isAlive && !in.ready())
-        return s"<child exited with ${child.exitValue()} and no output>"
-      Thread.sleep(20)
-    }
-    if (in.ready()) in.readLine() else "<timed out waiting for child output>"
   }
 
   def cfg(occ: Boolean = false): TableConfig = TableConfig(
@@ -249,26 +234,21 @@ class ArchiveOccSpec extends AnyFunSuite with BeforeAndAfterAll {
   // the SAME lifecycle + conflict suite must hold under every storage
   // profile: rename (HDFS-like, the default), and the simulated
   // object-store profile (conditional-put instants, data moved by copy)
-  // with either lock provider
+  // under each lock provider
 
   for ((store, lock) <- Seq(
       (CommitStore.Rename, TimelineLock.File),
       (CommitStore.Put, TimelineLock.File),
       (CommitStore.Put, TimelineLock.InProcess),
-      // "tcp" resolves to the live server's port inside pcfg (the port
-      // is only known once the shared LockServer binds)
-      (CommitStore.Rename, "tcp"),
-      (CommitStore.Put, "tcp"),
-      // the REAL ZooKeeper provider against the in-process ZK server
+      // the REAL ZooKeeper provider against the in-process ZK server:
+      // every commit store keeps an out-of-process lock leg ("zk"
+      // resolves to the server's connect string inside pcfg)
+      (CommitStore.Rename, "zk"),
       (CommitStore.Put, "zk"))) {
 
     def pcfg(occ: Boolean = false): TableConfig =
       cfg(occ).copy(commitStore = store,
-        lockProvider = lock match {
-          case "tcp" => s"tcp:127.0.0.1:${lockServer.port}"
-          case "zk"  => s"zk:${zkConnect}"
-          case other => other
-        })
+        lockProvider = if (lock == "zk") s"zk:$zkConnect" else lock)
 
     test(s"[$store/$lock] MOR lifecycle + archive round-trips") {
       val tbl = GraftTable.create(spark, tmp(),
@@ -310,79 +290,6 @@ class ArchiveOccSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("tcp lock provider: session semantics match the ZK contract") {
-    val srv = new LockServer()
-    val port = srv.start()
-    try {
-      val a = new TcpLockProvider("127.0.0.1", port, "/t1")
-      val b = new TcpLockProvider("127.0.0.1", port, "/t1")
-      val other = new TcpLockProvider("127.0.0.1", port, "/t2")
-      // mutual exclusion across sessions; independence across keys
-      assert(a.tryLock())
-      assert(!b.tryLock())
-      assert(other.tryLock())
-      // re-acquire of a held key by its OWN session is idempotent
-      assert(a.tryLock())
-      // only the owner can release
-      b.unlock()
-      assert(!b.tryLock(), "a non-owner RELEASE must not free the lock")
-      a.unlock()
-      assert(b.tryLock())
-      b.unlock(); other.unlock()
-
-      // ephemeral release: a crashed writer (dropped session) frees its
-      // locks without any unlock call
-      val crasher = new TcpLockProvider("127.0.0.1", port, "/t3")
-      assert(crasher.tryLock())
-      assert(srv.heldKeys.contains("/t3"))
-      // simulate the crash: kill the socket behind the provider's back
-      val f = classOf[TcpLockProvider].getDeclaredField("sock")
-      f.setAccessible(true)
-      f.get(crasher).asInstanceOf[java.net.Socket].close()
-      assert(eventually()(!srv.heldKeys.contains("/t3")),
-        "server must release a dead session's locks (ephemeral semantics)")
-    } finally srv.stop()
-
-    // an unreachable server fails LOUDLY — never a silent "held"
-    val dead = new TcpLockProvider("127.0.0.1", port, "/t1")
-    intercept[IllegalStateException] { dead.tryLock() }
-  }
-
-  test("tcp lock provider excludes a writer in a DIFFERENT JVM; its crash releases") {
-    // a real second process (no Spark on its classpath — LockProbe is
-    // pure JVM) acquires the table lock through the shared server; this
-    // JVM must see HELD until the foreign process is killed, after which
-    // the lock evaporates (the ephemeral/crash contract ZK gives the
-    // reference, ZookeeperBasedLockProvider.java:55)
-    val key = "/crossjvm"
-    val classes = new java.io.File(
-      classOf[LockServer].getProtectionDomain.getCodeSource.getLocation.toURI)
-    val scalaLib = new java.io.File(
-      classOf[scala.Option[_]].getProtectionDomain.getCodeSource.getLocation.toURI)
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val child = new ProcessBuilder(javaBin,
-      "-cp", s"${classes.getPath}:${scalaLib.getPath}",
-      "graft.core.LockProbe", "127.0.0.1", lockServer.port.toString, key)
-      .redirectErrorStream(true).start()
-    try {
-      val out = new java.io.BufferedReader(
-        new java.io.InputStreamReader(child.getInputStream))
-      // bounded read: a slow JVM start just waits; a wedged/dead child
-      // fails with its exit status instead of hanging the suite
-      val verdict = readLineWithin(out, child)
-      assert(verdict == "ACQUIRED", s"probe JVM could not acquire: $verdict")
-      // exclusion across process boundaries
-      val mine = new TcpLockProvider("127.0.0.1", lockServer.port, key)
-      assert(!mine.tryLock(), "lock held by another JVM must read HELD here")
-      // crash the foreign writer -> its session's locks evaporate
-      child.destroyForcibly()
-      child.waitFor()
-      assert(eventually()(mine.tryLock()),
-        "a crashed JVM's lock must release without any unlock call")
-      mine.unlock()
-    } finally if (child.isAlive) { child.destroyForcibly(); child.waitFor() }
-  }
-
   test("moveFile is idempotent under task retry: completed move re-runs as a no-op") {
     import org.apache.hadoop.fs.Path
     val dir = tmp()
@@ -410,108 +317,44 @@ class ArchiveOccSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("tcp provider close() ends the session and releases its locks") {
-    val a = new TcpLockProvider("127.0.0.1", lockServer.port, "/closeme")
-    assert(a.tryLock())
-    assert(lockServer.heldKeys.contains("/closeme"))
-    a.close()
-    a.close() // idempotent
-    assert(eventually()(!lockServer.heldKeys.contains("/closeme")),
-      "close() must end the session so held keys ephemeral-release")
-  }
-
-  test("fence tokens: monotonic per re-acquire, VERIFY catches loss, non-owner RELEASE errs") {
-    val srv = new LockServer()
-    val port = srv.start()
-    try {
-      // provider-level: a token is minted per acquire and strictly grows
-      val a = new TcpLockProvider("127.0.0.1", port, "/f1")
-      assert(a.tryLock())
-      val f1 = a.fenceToken.get
-      assert(a.verifyFence(), "the live holder must verify OK")
-      a.unlock()
-      assert(!a.verifyFence(), "after release there is nothing to verify")
-      assert(a.tryLock())
-      val f2 = a.fenceToken.get
-      assert(f2 > f1, s"fence must be monotonic: $f2 <= $f1")
-      // loss: kill the socket behind the provider's back — the (believed)
-      // holder must read STALE, never OK
-      val sockF = classOf[TcpLockProvider].getDeclaredField("sock")
-      sockF.setAccessible(true)
-      sockF.get(a).asInstanceOf[java.net.Socket].close()
-      assert(!a.verifyFence(), "a lost session must verify STALE")
-      // a NEW holder's token is newer than every token the key ever had
-      assert(eventually()(!srv.heldKeys.contains("/f1")))
-      val b = new TcpLockProvider("127.0.0.1", port, "/f1")
-      assert(b.tryLock())
-      assert(b.fenceToken.get > f2)
-      assert(b.verifyFence())
-      b.unlock(); b.close(); a.close()
-
-      // protocol-level: RELEASE by a non-owner answers ERR, not OK (the
-      // ZK NONODE/NOAUTH analog — a buggy client must hear the truth)
-      val holder = new TcpLockProvider("127.0.0.1", port, "/f2")
-      assert(holder.tryLock())
-      val raw = new java.net.Socket("127.0.0.1", port)
-      val rIn = new java.io.BufferedReader(
-        new java.io.InputStreamReader(raw.getInputStream))
-      val rOut = new java.io.PrintWriter(
-        new java.io.OutputStreamWriter(raw.getOutputStream), true)
-      rOut.println("RELEASE /f2")
-      assert(rIn.readLine() == "ERR", "non-owner RELEASE must answer ERR")
-      assert(srv.heldKeys.contains("/f2"), "and must free nothing")
-      rOut.println("RELEASE /absent")
-      assert(rIn.readLine() == "ERR", "RELEASE of an unheld key must answer ERR")
-      rOut.println("PING")
-      assert(rIn.readLine() == "PONG")
-      raw.close(); holder.unlock(); holder.close()
-
-      // keys are table base paths and may contain spaces — the line
-      // protocol must round-trip them through ACQUIRE/VERIFY/RELEASE
-      val spaced = new TcpLockProvider("127.0.0.1", port, "/tmp/dir with space/t")
-      assert(spaced.tryLock())
-      assert(spaced.fenceToken.isDefined)
-      assert(spaced.verifyFence(), "VERIFY must parse a spaced key")
-      val spacedB = new TcpLockProvider("127.0.0.1", port, "/tmp/dir with space/t")
-      assert(!spacedB.tryLock())
-      spaced.unlock()
-      assert(spacedB.tryLock())
-      spacedB.unlock(); spaced.close(); spacedB.close()
-    } finally srv.stop()
-  }
-
   for (store <- Seq(CommitStore.Rename, CommitStore.Put)) {
     test(s"[$store] mid-commit session loss: the stale writer's complete() " +
         "fails at the fence, a new writer's succeeds") {
-      import spark.implicits._
-      val srv = new LockServer()
-      val port = srv.start()
+      // a dedicated ensemble per leg, so the fault kills only this
+      // test's session
+      val (connect, stopZk) = EmbeddedZk.start()
       try {
         val tbl = GraftTable.create(spark, tmp(), cfg(occ = true).copy(
-          commitStore = store, lockProvider = s"tcp:127.0.0.1:$port"))
+          commitStore = store, lockProvider = s"zk:$connect"))
         tbl.bulkInsert(rows(1L, 2L, 3L))
         // the partition hits at the worst instant: conflict check passed,
         // completing write not yet issued — exactly the window plain
-        // ephemeral locks leave open
-        tbl.onBeforeComplete = () => srv.killSessions()
-        val ex = intercept[LockSessionLostException] {
-          tbl.upsert(rows(1L).withColumn("v", lit("stale")))
-        }
+        // ephemeral locks leave open. Expiring the writer's ZK session
+        // server-side drops its lock and fence marker with it
+        tbl.onBeforeComplete = () =>
+          EmbeddedZk.killSession(ZkLockProvider.cachedClient(connect), connect)
+        val ex =
+          try intercept[LockSessionLostException] {
+            tbl.upsert(rows(1L).withColumn("v", lit("stale")))
+          } finally tbl.onBeforeComplete = () => ()
         assert(ex.getMessage.contains("rolled back"))
-        tbl.onBeforeComplete = () => ()
         // clean abort: no pending instant, no phantom data, state intact
         assert(tbl.timeline.instants().forall(_.isCompleted))
         assert(state(tbl) == Seq(1L, 2L, 3L))
         val r0 = GraftReader(tbl)
         assert(r0.dataOnly(r0.snapshot()).filter(col("v") === "stale").count() == 0)
-        // the new holder commits, and records the fence it held
+        // the new holder (fresh session) commits, and records the fence
+        // it held
         tbl.upsert(rows(4L))
         assert(state(tbl) == Seq(1L, 2L, 3L, 4L))
         val last = tbl.timeline.completed().last
         val fence = tbl.timeline.metadataOf(last).extra.get("fenceToken")
         assert(fence.exists(_.forall(_.isDigit)),
           "completed instant must record the fence token it committed under")
-      } finally srv.stop()
+      } finally {
+        stopZk()
+        ZkLockProvider.closeCached(connect)
+      }
     }
   }
 
@@ -559,28 +402,6 @@ class ArchiveOccSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.tryLock())
     assert(p.fenceToken.exists(_ >= 0) && p.verifyFence())
     p.unlock()
-  }
-
-  test("idle sessions are reaped; a keepalive'd session survives the timeout") {
-    val srv = new LockServer(idleTimeoutMs = 300)
-    val port = srv.start()
-    try {
-      // no keepalive: the session goes silent and the server reaps it —
-      // a leaked provider cannot pin a lock forever
-      val leaky = new TcpLockProvider("127.0.0.1", port, "/idle", keepaliveMs = 0)
-      assert(leaky.tryLock())
-      assert(eventually()(!srv.heldKeys.contains("/idle")),
-        "an idle session past the timeout must be reaped (locks released)")
-      // keepalive well under the timeout: the session outlives many
-      // timeout windows while holding its lock (the ZK client heartbeat)
-      val live = new TcpLockProvider("127.0.0.1", port, "/live", keepaliveMs = 100)
-      assert(live.tryLock())
-      Thread.sleep(1200) // 4 timeout windows
-      assert(srv.heldKeys.contains("/live"),
-        "a heartbeating session must survive the idle timeout")
-      assert(live.verifyFence())
-      live.unlock(); live.close(); leaky.close()
-    } finally srv.stop()
   }
 
   test("put-store moveFile: concurrent duplicate attempts never tear the dest") {

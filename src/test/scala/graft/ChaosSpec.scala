@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
@@ -72,6 +72,12 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
     }._1
   }
 
+  // the kill legs force every publish through the distributed job via a
+  // JVM-wide seam; reset it after every test, whatever the outcome
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally GraftTable.publishDistributedOverride = None
+
   override def afterAll(): Unit = {
     spark.stop()
     zkServer.foreach { case (c, stop) =>
@@ -137,9 +143,9 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       partitionFields = Seq("p"), orderingField = "", occ = true,
       commitStore = store,
       lockProvider = if (lockKey == "zk") s"zk:${zkConnect()}" else "inprocess",
-      publishMode = if (kills) "distributed" else "auto",
       failedWritesPolicy = "lazy", heartbeatTtlMs = 60000,
       targetFileRows = 200, baseFormat = format))
+    if (kills) GraftTable.publishDistributedOverride = Some(true)
     val svc = TableServices(tbl)
     val fs = tbl.timeline.fileSystem
     var shadow: Shadow = Map.empty

@@ -14,10 +14,10 @@ import graft.write.GraftTable
 /** End-to-end multi-writer race across REAL process boundaries: a second
   * JVM ([[graft.write.WriterProbe]]) runs a genuine upsert through the
   * full publish path against the same table directory this JVM writes,
-  * under the out-of-process tcp lock × both commit-store profiles — the
-  * full production multi-writer posture (reference analog:
-  * TestHoodieClientMultiWriter). LockProbe-based tests prove lock
-  * exclusion; this proves the COMMIT PROTOCOL serializes real writers:
+  * under the out-of-process zk lock × both commit-store profiles (plus
+  * the file and hms legs) — the full production multi-writer posture
+  * (reference analog: TestHoodieClientMultiWriter). It proves the
+  * COMMIT PROTOCOL serializes real writers:
   * exactly-once state, no pending instants, no phantom values, whichever
   * interleaving the scheduler produces. */
 class CrossJvmWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -29,14 +29,13 @@ class CrossJvmWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false"))
     .getOrCreate()
 
-  lazy val lockServer: LockServer = { val s = new LockServer(); s.start(); s }
   lazy val zk: (String, () => Unit) = EmbeddedZk.start()
   // real thrift metastore (daemon thread; dies with the JVM)
   lazy val hmsUri: String = EmbeddedHms.start()
 
   override def afterAll(): Unit = {
     spark.stop()
-    lockServer.stop()
+    ZkLockProvider.closeCached(zk._1)
     zk._2()
   }
 
@@ -84,14 +83,14 @@ class CrossJvmWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     if (in.ready()) in.readLine() else "<timed out waiting for probe>"
   }
 
-  // tcp = the ZK-analog service posture; file = the pure-FS (HDFS-class)
-  // posture, whose cross-process exclusion rests on the atomic
-  // create-if-absent the NIO CREATE_NEW fix guarantees on local disks
+  // zk = the out-of-process lock service posture, on both commit
+  // stores; file = the pure-FS (HDFS-class) posture, whose cross-process
+  // exclusion rests on the atomic create-if-absent the NIO CREATE_NEW
+  // fix guarantees on local disks
   for ((store, lock) <- Seq(
-      (CommitStore.Rename, "tcp"),
-      (CommitStore.Put, "tcp"),
+      (CommitStore.Rename, "zk"),    // real ZooKeeper across both JVMs
+      (CommitStore.Put, "zk"),
       (CommitStore.Rename, TimelineLock.File),
-      (CommitStore.Put, "zk"),       // real ZooKeeper across both JVMs
       (CommitStore.Rename, "hms"))) { // real thrift metastore across both JVMs
     test(s"[$store/$lock] a second writer JVM races this one on a single key: " +
         "exactly-once state, clean timeline") {
@@ -102,7 +101,6 @@ class CrossJvmWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
         orderingField = "", targetFileRows = 1000, occ = true,
         commitStore = store,
         lockProvider = lock match {
-          case "tcp" => s"tcp:127.0.0.1:${lockServer.port}"
           case "zk"  => s"zk:${zk._1}"
           case "hms" => s"hms:$hmsUri"
           case other => other

@@ -27,6 +27,17 @@ class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def tmp(): String = Files.createTempDirectory("graft-gw").toString
 
+  /** Parquet-stages `df` grouped by `gp`/`gf` the way the publish path
+    * does, returning the manifest of (path, (rows, bytes, stats)). */
+  private def stage(df: org.apache.spark.sql.DataFrame, dest: String) = {
+    val types = df.schema.fields.filterNot(f => f.name == "gp" || f.name == "gf")
+      .map(f => f.name -> f.dataType).toMap
+    org.apache.spark.sql.graft.GroupedFileWriter.write(
+      spark, df, Seq("gp", "gf"), dest, "parquet",
+      (dataSchema: org.apache.spark.sql.types.StructType) =>
+        new graft.write.RowStats.Collector(types, false, dataSchema))
+  }
+
   test("direct writer reproduces partitionBy's directory layout, escaping and data") {
     import spark.implicits._
     // group values exercise the escaping corners partitionBy handles:
@@ -45,8 +56,8 @@ class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.write.mode("overwrite").partitionBy("gp", "gf")
       .format("parquet").save(viaSpark)
     val viaDirect = tmp()
-    org.apache.spark.sql.graft.GroupedFileWriter.write(
-      spark, df, Seq("gp", "gf"), viaDirect, "parquet")
+    val manifest = stage(df, viaDirect)
+    assert(manifest.map(_._2._1).sum == 500L, "the manifest counts every row")
 
     val fs = new Path(viaDirect).getFileSystem(
       spark.sessionState.newHadoopConf())
@@ -78,8 +89,7 @@ class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val dest = tmp()
     val df = Seq.empty[(Long, String, String)].toDF("id", "gp", "gf")
-    org.apache.spark.sql.graft.GroupedFileWriter.write(
-      spark, df, Seq("gp", "gf"), dest, "parquet")
+    assert(stage(df, dest).isEmpty)
     val fs = new Path(dest).getFileSystem(spark.sessionState.newHadoopConf())
     val found = Option(fs.globStatus(new Path(dest, "gp=*/gf=*/part-*")))
       .map(_.toSeq).getOrElse(Nil)

@@ -50,13 +50,21 @@ class PublishScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       targetFileRows = 1000, statsColumns = Seq("v"), commitStore = store,
       baseFormat = format)
 
-  /** Wall time of one bulk_insert producing exactly `groups` file groups. */
+  /** Runs `body` with the publish vehicle forced: `Some(true)` the
+    * distributed job, `Some(false)` the driver pool, `None` the
+    * group-count and byte-volume rule. */
+  private def publishing[T](distributed: Option[Boolean])(body: => T): T = {
+    GraftTable.publishDistributedOverride = distributed
+    try body finally GraftTable.publishDistributedOverride = None
+  }
+
+  /** Wall time of one bulk_insert producing exactly `groups` file groups,
+    * published as `distributed` says (see [[publishing]]). */
   private def timeCommit(groups: Int, store: String,
-      format: String = "parquet", publishMode: String = "auto"): Double = {
-    val tbl = GraftTable.create(spark, tmp(),
-      cfg(store, format).copy(publishMode = publishMode))
+      format: String = "parquet", distributed: Option[Boolean] = None): Double = {
+    val tbl = GraftTable.create(spark, tmp(), cfg(store, format))
     val t0 = System.nanoTime()
-    tbl.bulkInsert(df(groups))
+    publishing(distributed)(tbl.bulkInsert(df(groups)))
     val sec = (System.nanoTime() - t0) / 1e9
     val snap = Snapshot.resolve(tbl.timeline)
     assert(snap.slices.size == groups,
@@ -117,9 +125,9 @@ class PublishScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // out of the data path entirely, so group count scales with executor
     // count, not driver throughput.
     val per2k = timeCommit(2000, CommitStore.Rename,
-      publishMode = "distributed") / 2000
+      distributed = Some(true)) / 2000
     val per10k = timeCommit(10000, CommitStore.Rename,
-      publishMode = "distributed") / 10000
+      distributed = Some(true)) / 10000
     info(f"distributed per-group: $per2k%.5fs at 2k, $per10k%.5fs at 10k")
     assert(per10k < per2k * 2.5,
       f"per-group cost must stay ~flat under distributed publication: " +
@@ -130,8 +138,8 @@ class PublishScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fits its publish pool; distributed wins from the low hundreds
     val points = Seq(32, 256)
     points.foreach { n =>
-      val drv = timeCommit(n, CommitStore.Rename, publishMode = "driver")
-      val dst = timeCommit(n, CommitStore.Rename, publishMode = "distributed")
+      val drv = timeCommit(n, CommitStore.Rename, distributed = Some(false))
+      val dst = timeCommit(n, CommitStore.Rename, distributed = Some(true))
       info(f"crossover probe n=$n%-4d driver=$drv%.2fs distributed=$dst%.2fs")
     }
   }
@@ -143,9 +151,8 @@ class PublishScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.dataOnly(r.snapshot()).count() == 5)
 
     // forced-distributed tiny commit: same bytes, same stats
-    val tbl2 = GraftTable.create(spark, tmp(),
-      cfg(CommitStore.Rename).copy(publishMode = "distributed"))
-    tbl2.bulkInsert(df(5))
+    val tbl2 = GraftTable.create(spark, tmp(), cfg(CommitStore.Rename))
+    publishing(Some(true))(tbl2.bulkInsert(df(5)))
     val r2 = GraftReader(tbl2)
     assert(r2.dataOnly(r2.snapshot()).count() == 5)
     val s1 = Snapshot.resolve(tbl.timeline).slices.flatMap(_.baseFile)
@@ -171,11 +178,42 @@ class PublishScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stats.forall(_.columnStats.contains("v")))
   }
 
-  test("unknown publishMode is rejected at create") {
-    val e = intercept[IllegalArgumentException] {
-      GraftTable.create(spark, tmp(),
-        cfg(CommitStore.Rename).copy(publishMode = "teleport"))
+  test("a table.json that still carries publishMode loads, and its publish follows the group/byte rule") {
+    import spark.implicits._
+    val dir = tmp()
+    GraftTable.create(spark, dir, cfg(CommitStore.Rename))
+    // a table written before the option was removed: the stored config
+    // still names a publish vehicle (written through the filesystem so
+    // its checksum stays valid)
+    val tl = new Timeline(dir, spark.sessionState.newHadoopConf())
+    val conf = new org.apache.hadoop.fs.Path(tl.metaDir, Timeline.ConfigFile)
+    val fs = tl.fileSystem
+    val json = { val in = fs.open(conf); try new String(in.readAllBytes(), "UTF-8") finally in.close() }
+    assert(json.startsWith("{") && !json.contains("publishMode"))
+    val out = fs.create(conf, true)
+    try out.write(("{\"publishMode\":\"driver\"," + json.drop(1)).getBytes("UTF-8"))
+    finally out.close()
+    assert(tl.config.name == "pubscale")
+    val tbl = GraftTable.load(spark, dir)
+    // the thread each file lands on names the vehicle: executor task
+    // threads for the distributed job, the driver pool otherwise
+    def publishThreads(commit: => Unit): Seq[String] = {
+      val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      GraftTable.onPublishedMove = _ => { names.add(Thread.currentThread().getName); () }
+      try commit finally GraftTable.onPublishedMove = _ => ()
+      names.toArray(Array.empty[String]).toSeq
     }
-    assert(e.getMessage.contains("publishMode"))
+    def onExecutor(t: String): Boolean = t.startsWith("Executor task launch worker")
+    // 64 groups > the 32-thread driver pool: distributed, despite "driver"
+    val wide = publishThreads(tbl.bulkInsert(df(64)))
+    assert(wide.size == 64 && wide.forall(onExecutor),
+      s"a 64-group commit must publish on executors: ${wide.distinct.take(3)}")
+    // 5 groups fit the pool: the driver keeps them
+    val narrow = publishThreads(tbl.bulkInsert(
+      (101 to 105).map(i => (i.toLong, s"p$i", s"v$i", i.toLong)).toDF("id", "p", "v", "ts")))
+    assert(narrow.size == 5 && !narrow.exists(onExecutor),
+      s"a 5-group commit must publish on the driver pool: ${narrow.distinct.take(3)}")
+    val r = GraftReader(tbl)
+    assert(r.dataOnly(r.snapshot()).count() == 69)
   }
 }

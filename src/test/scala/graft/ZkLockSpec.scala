@@ -120,6 +120,58 @@ class ZkLockSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e2.getMessage.contains("zk:<connectString>"))
   }
 
+  test("unlock() by a provider that does not hold the lock leaves the holder's lock held") {
+    val holder = new ZkLockProvider(connect, "/data/nonowner")
+    val other = new ZkLockProvider(connect, "/data/nonowner")
+    try {
+      assert(holder.tryLock())
+      // a provider that never acquired, then one whose acquire failed:
+      // neither unlock may free the holder's lock
+      other.unlock()
+      assert(!other.tryLock(), "the lock must still be held after a non-owner unlock")
+      other.unlock()
+      assert(holder.verifyFence(), "the holder's fence must survive a non-owner unlock")
+      assert(!other.tryLock())
+      holder.unlock()
+      assert(eventually()(other.tryLock()), "the owner's unlock frees the lock")
+      other.unlock()
+    } finally { holder.close(); other.close() }
+  }
+
+  test("table paths that sanitise to the same string get different locks") {
+    // both keys sanitise to "_tmp_a_b"; the md5 suffix of the raw path
+    // keeps their ZK lock nodes apart
+    val spaced = new ZkLockProvider(connect, "/tmp/a b")
+    val underscored = new ZkLockProvider(connect, "/tmp/a_b")
+    val spacedPeer = new ZkLockProvider(connect, "/tmp/a b")
+    try {
+      assert(spaced.describe != underscored.describe)
+      assert(spaced.tryLock())
+      assert(underscored.tryLock(),
+        "a table whose path only sanitises alike must not be excluded")
+      assert(!spacedPeer.tryLock(), "the same table path still excludes")
+      spaced.unlock(); underscored.unlock()
+    } finally { spaced.close(); underscored.close(); spacedPeer.close() }
+  }
+
+  test("a stored lockProvider 'tcp:' fails loudly, never falls back to the file lock") {
+    val dir = tmp()
+    val tl = new Timeline(dir, spark.sessionState.newHadoopConf())
+    tl.initTable(TableConfig(name = "ztcp", tableType = TableType.COW,
+      keyFields = Seq("id"), orderingField = "ts", occ = true,
+      lockProvider = "tcp:127.0.0.1:1"))
+    val e = intercept[IllegalArgumentException] { TimelineLock.providerFor(tl) }
+    assert(e.getMessage.contains("unknown lockProvider 'tcp:127.0.0.1:1'"))
+    assert(e.getMessage.contains("zk:<connectString>"),
+      s"the message must name the supported forms: ${e.getMessage}")
+    // the commit-point lock refuses too, and takes no file lock on the way
+    var ran = false
+    intercept[IllegalArgumentException] { new TimelineLock(tl).withLock { ran = true } }
+    assert(!ran, "nothing may run under a lock that was never taken")
+    val lockFile = new org.apache.hadoop.fs.Path(tl.metaDir, TimelineLock.LockFile)
+    assert(!tl.fileSystem.exists(lockFile), "no silent file-lock fallback")
+  }
+
   test("sequential commits share ONE long-lived zk session (no per-commit connect)") {
     import spark.implicits._
     val tbl = GraftTable.create(spark, tmp(), TableConfig(

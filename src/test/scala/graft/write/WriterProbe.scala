@@ -10,12 +10,12 @@ package graft.write
   *  - `CONFLICT`            — lost the OCC race, rolled back cleanly
   *  - `ERROR <class>: <msg>` — anything else (a test failure)
   *
-  * The companion of [[graft.core.LockProbe]] one level up the stack:
-  * LockProbe proves cross-process lock EXCLUSION, WriterProbe proves the
-  * whole commit protocol serializes real writers across process
-  * boundaries (reference analog: TestHoodieClientMultiWriter's
-  * two-writer scenarios). Usage: `WriterProbe <tableDir> <id>` — upserts
-  * key 1 with value `probe<id>`. */
+  * It proves the whole commit protocol serializes real writers across
+  * process boundaries (reference analog: TestHoodieClientMultiWriter's
+  * two-writer scenarios). Test code: `CrossJvmWriterSpec` launches it on
+  * the forked test JVM's classpath, which carries the test classes.
+  * Usage: `WriterProbe <tableDir> <id>` — upserts key 1 with value
+  * `probe<id>`. */
 object WriterProbe {
   def main(args: Array[String]): Unit = {
     val Array(tableDir, id) = args
