@@ -52,7 +52,7 @@ object Tables {
     .config("spark.sql.adaptive.enabled", "true")
     // fork-free local FS: without libhadoop, stock RawLocalFileSystem
     // forks a `chmod` process per created file (sampled at ~75% of a
-    // many-group commit's staged-write wall time) — see
+    // many-group commit's write wall time) — see
     // graft.core.NioLocalFileSystem. Identical semantics, no forks.
     .config("spark.hadoop.fs.file.impl",
       classOf[graft.core.NioLocalFileSystem].getName)

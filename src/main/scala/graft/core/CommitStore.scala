@@ -3,7 +3,7 @@ package graft.core
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Storage-atomicity seam for commit publication (reference analog:
+/** Storage-atomicity seam for the timeline (reference analog:
   * HoodieActiveTimeline.java:525-641, whose `createImmutableFileInPath` /
   * transition renames are the same three primitives). Every place the
   * engine needs an atomicity guarantee from storage funnels through one
@@ -14,17 +14,18 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *  - `put` (S3-class object stores): there IS no atomic rename — a
   *    "rename" is a server-side copy + delete, and exclusivity comes
   *    from conditional writes (`PUT If-None-Match: *`). This impl
-  *    simulates that profile: data files are moved by COPY (never by
-  *    directory/file rename), proving the commit protocol survives a
-  *    store where rename is not atomic and not cheap.
+  *    simulates that profile: moves are COPIES (never a rename of the
+  *    source), proving the commit protocol survives a store where
+  *    rename is not atomic and not cheap.
   *
-  * Visibility caveat of the simulation: a real object-store PUT is
-  * all-or-nothing; the only LOCAL primitive with that visibility
-  * contract is an exclusive temp-rename, so the simulated store uses it
-  * as the emulation vehicle for small metadata objects. What the `put`
-  * profile exercises end-to-end is the protocol's independence from
-  * rename-as-move: staged DATA files (the big ones — the actual scale
-  * risk) reach their published names by copy.
+  * Data files need none of these ops: each is written once, at its
+  * committed name ([[org.apache.spark.sql.graft.GroupedFileWriter]]),
+  * and becomes visible only when a completed instant lists it — on an
+  * object store, one whole-object PUT per file. Visibility caveat of the
+  * simulation: a real PUT is all-or-nothing; the only LOCAL primitive
+  * with that contract is a temp-rename within one directory, so the
+  * data-file writer and the metadata ops here use it as the emulation
+  * vehicle.
   */
 trait CommitStore {
   def name: String
@@ -40,17 +41,16 @@ trait CommitStore {
     * plain `PUT`). */
   def putAtomic(fs: FileSystem, dest: Path, content: String): Unit
 
-  /** Move a file to its published location, failing loudly if the move
-    * cannot complete. Data-file publication and archive moves go through
-    * here — the op whose cost model differs 1000× between profiles.
+  /** Move a file to a new location, failing loudly if the move cannot
+    * complete. Archive moves of completed instants go through here — the
+    * op whose cost model differs 1000× between profiles.
     *
     * MUST be idempotent w.r.t. re-execution after a completed move
-    * (src gone, dest present → success, not an error): distributed
-    * publication runs moves inside Spark tasks, and a task that finished
-    * its move but died before reporting is re-run verbatim on retry or
-    * speculation — on a real cluster that retry must not fail the whole
-    * commit. Source deletion is always the LAST step after the move is
-    * verified complete, so src-absent + dest-present proves completion. */
+    * (src gone, dest present → success, not an error): a caller that
+    * finished its move but died before recording it re-runs the move
+    * verbatim, and that retry must not fail. Source deletion is always
+    * the LAST step after the move is verified complete, so src-absent +
+    * dest-present proves completion. */
   def moveFile(fs: FileSystem, src: Path, dest: Path): Unit
 }
 
@@ -74,9 +74,8 @@ object CommitStore {
   }
 
   // FileContext per filesystem URI: getFileContext() builds a fresh
-  // FileContext each call, and the put profile pays it once per DATA
-  // FILE (moveFile promote) — at thousand-group commits that is publish
-  // tail, not setup cost. FileContext is thread-safe.
+  // FileContext each call, and every instant transition needs one.
+  // FileContext is thread-safe.
   private val fcCache =
     new java.util.concurrent.ConcurrentHashMap[java.net.URI, org.apache.hadoop.fs.FileContext]()
   private[core] def fileContext(fs: FileSystem): org.apache.hadoop.fs.FileContext =
@@ -114,7 +113,7 @@ object RenameCommitStore extends CommitStore {
       // idempotent re-run (task retry/speculation after the original
       // attempt's rename landed): src gone + dest present = already moved
       if (fs.exists(src) || !fs.exists(dest))
-        throw new IllegalStateException(s"publish rename failed: $src -> $dest")
+        throw new IllegalStateException(s"rename failed: $src -> $dest")
     }
   }
 }
@@ -137,8 +136,8 @@ object ConditionalPutCommitStore extends CommitStore {
     RenameCommitStore.putAtomic(fs, dest, content)
 
   override def moveFile(fs: FileSystem, src: Path, dest: Path): Unit = {
-    // Idempotent under task retry AND safe under CONCURRENT duplicate
-    // attempts (Spark speculation): each attempt copies into its own
+    // Idempotent under retry AND safe under CONCURRENT duplicate
+    // attempts (two processes archiving one instant): each attempt copies into its own
     // attempt-unique temp and only then atomically PROMOTES it over dest
     // — dest is therefore never torn, so src-absent + dest-present
     // always proves a completed attempt. Writing dest directly would
@@ -151,7 +150,7 @@ object ConditionalPutCommitStore extends CommitStore {
     if (srcLen.isEmpty) {
       if (fs.exists(dest)) return // a finished duplicate attempt won
       throw new IllegalStateException(
-        s"publish copy source missing and dest absent: $src -> $dest")
+        s"copy source missing and dest absent: $src -> $dest")
     }
     // object-store "rename" = server-side copy + delete source; stream
     // copy here (the simulation pays the same O(bytes) cost shape). The
@@ -168,13 +167,13 @@ object ConditionalPutCommitStore extends CommitStore {
       val tl = fs.getFileStatus(tmp).getLen
       if (tl != srcLen.get)
         throw new IllegalStateException(
-          s"publish copy truncated: $src (${srcLen.get} B) -> $tmp ($tl B)")
+          s"copy truncated: $src (${srcLen.get} B) -> $tmp ($tl B)")
       // promote: atomic replace (the PUT-visibility emulation — readers
       // and duplicate attempts see the old dest or the complete new one).
       // Plain FileSystem.rename: on LocalFileSystem it is POSIX
       // rename(2), atomic and overwriting — NOT FileContext.rename,
-      // whose link-resolution path costs ~7 ms/file and made a
-      // 2k-group publish 100x slower than the rename itself. A false
+      // whose link-resolution path costs ~7 ms/file, 100x the rename
+      // itself. A false
       // return (a stricter FS refusing an existing dest) means a
       // duplicate attempt promoted first; dest only ever holds COMPLETE
       // payloads (promotes are whole-file renames), so accept iff dest
@@ -183,7 +182,7 @@ object ConditionalPutCommitStore extends CommitStore {
         fs.delete(tmp, false)
         if (!(fs.exists(dest) && fs.getFileStatus(dest).getLen == srcLen.get))
           throw new IllegalStateException(
-            s"publish promote failed: $tmp -> $dest")
+            s"promote failed: $tmp -> $dest")
       }
     } catch {
       case e: Exception =>

@@ -72,10 +72,9 @@ class HmsLockProvider(connect: String, key: String) extends LockProvider {
 
   /** Heartbeat the hold every txn-timeout/3 while held: the metastore's
     * ACID lock manager reaps holds whose last heartbeat is older than
-    * `hive.txn.timeout` (default 300 s), and a distributed publish of a
-    * 100k-file commit can easily outlive that — without a keepalive the
-    * hold is reaped mid-write and the commit systematically aborts at
-    * the fence check. Same shape as a ZooKeeper client's session
+    * `hive.txn.timeout` (default 300 s) — without a keepalive, a
+    * critical section that outlives it has its hold reaped mid-section
+    * and the commit systematically aborts at the fence check. Same shape as a ZooKeeper client's session
     * heartbeat. A failed beat is left to the COMMIT
     * POINT fence check — the keepalive must never unlock or abort on
     * its own (a transient blip would kill a healthy commit). */

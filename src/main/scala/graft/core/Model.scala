@@ -120,9 +120,6 @@ case class TableConfig(
       * (reference analog: the BLOOM index, Hudi's default —
       * HoodieIndexConfig.java:53, HoodieBloomIndex.java) */
     bloomIndex: Boolean = false,
-    /** bloom false-positive rate (reference default 1e-9,
-      * hoodie.index.bloom.fpp, HoodieIndexConfig.java:68-89) */
-    bloomFpp: Double = 0.000000001,
     /** optimistic concurrency for multi-writer: commits take a timeline
       * lock and fail on overlapping file groups (reference analog:
       * WriteConcurrencyMode.OPTIMISTIC_CONCURRENCY_CONTROL +
@@ -212,17 +209,12 @@ case class TableConfig(
       * ZookeeperBasedLockProvider.java:55 /
       * InProcessLockProvider.java). */
     lockProvider: String = "file",
-    /** failed-write cleanup at write start (reference analog:
-      * hoodie.cleaner.policy.failed.writes,
-      * HoodieCompactionConfig.java:214 + the rollbackFailedWrites loop,
-      * AbstractHoodieWriteClient.java:916-976): "eager" rolls back every
-      * pending write instant (single-writer semantics), "lazy" only
-      * those whose writer heartbeat expired (multi-writer safe — the
-      * reference mandates LAZY under OCC), "none" disables. The default
-      * "auto" resolves to eager on non-OCC tables and lazy on OCC
-      * tables. Old table.json files deserialize to null = auto. */
-    failedWritesPolicy: String = "auto",
-    /** heartbeat expiry for the LAZY policy, ms (reference analog:
+    /** heartbeat expiry, ms, for failed-write cleanup on OCC tables.
+      * Cleanup runs at write start and follows `occ` (reference analog:
+      * hoodie.cleaner.policy.failed.writes, HoodieCompactionConfig.java
+      * :214, which the reference mandates LAZY under OCC): without `occ`
+      * it rolls back every pending write instant; with `occ` only those
+      * whose writer heartbeat is older than this (reference analog:
       * hoodie.client.heartbeat.interval_in_ms × tolerable misses,
       * HoodieWriteConfig.java:368,373 — 60 s × 2 there; live writers
       * refresh every [[Heartbeat.RefreshMs]]). 0 = default. */

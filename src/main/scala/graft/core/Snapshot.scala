@@ -213,7 +213,7 @@ object Snapshot {
   /** The snapshot that WOULD result if a pending commit with `meta`
     * completed at `time` on top of `base` — the same single-instant fold
     * as `resolve`'s replay. Powers pre-commit validation: the "after"
-    * view is computed from staged (not yet visible) files without
+    * view is computed from written (not yet visible) files without
     * touching the timeline (reference analog: the inflight-commit view
     * handed to SparkPreCommitValidator.validate,
     * SparkPreCommitValidator.java:72). */

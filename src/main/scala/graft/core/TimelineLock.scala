@@ -209,34 +209,44 @@ object TimelineLock {
     * manager binding ([[HmsLockProvider]]). */
   val HmsPrefix = "hms:"
 
-  def providerFor(timeline: Timeline, staleMs: Long = 60000): LockProvider = {
-    // only the not-yet-initialized bootstrap may default; a config READ
-    // failure on a live table must propagate — silently falling back to
-    // the file provider would break mutual exclusion with peers that
-    // did read 'inprocess'
-    val n = Option(if (!timeline.exists) null else timeline.config.lockProvider)
-      .map(_.trim).filter(_.nonEmpty).getOrElse(File)
+  /** The form check of a `lockProvider` value, connecting nothing:
+    * returns the provider kind (`file`, `inprocess`, `zk:` or `hms:`)
+    * and its connect string ("" for the first two), or throws
+    * IllegalArgumentException naming the supported forms. null or empty
+    * reads as `file`. Table creation and every write start run it, so a
+    * bad value fails before any instant is minted or file written. */
+  def parse(lockProvider: String): (String, String) = {
+    val n = Option(lockProvider).map(_.trim).filter(_.nonEmpty).getOrElse(File)
+    def connect(prefix: String, form: String): (String, String) = {
+      val c = n.stripPrefix(prefix).trim
+      if (c.isEmpty) throw new IllegalArgumentException(
+        s"malformed lockProvider '$n' (expected '$prefix$form')")
+      (prefix, c)
+    }
     n match {
-      case File      => new FileLockProvider(timeline, staleMs)
-      case InProcess => new InProcessLockProvider(timeline.basePath)
-      case zk if zk.startsWith(ZkPrefix) =>
-        val connect = zk.stripPrefix(ZkPrefix).trim
-        if (connect.isEmpty) throw new IllegalArgumentException(
-          s"malformed lockProvider '$zk' (expected 'zk:<connectString>')")
-        // shared long-lived ZK session per connect string; only the
-        // mutex + fence marker are per-commit (see ZkLockProvider.cached)
-        ZkLockProvider.cached(connect, timeline.basePath)
-      case hms if hms.startsWith(HmsPrefix) =>
-        val connect = hms.stripPrefix(HmsPrefix).trim
-        if (connect.isEmpty) throw new IllegalArgumentException(
-          s"malformed lockProvider '$hms' (expected 'hms:<thrift://...|jdbc:...>')")
-        new HmsLockProvider(connect, timeline.basePath)
+      case File | InProcess => (n, "")
+      case zk if zk.startsWith(ZkPrefix) => connect(ZkPrefix, "<connectString>")
+      case hms if hms.startsWith(HmsPrefix) => connect(HmsPrefix, "<thrift://...|jdbc:...>")
       case other => throw new IllegalArgumentException(
         s"unknown lockProvider '$other' " +
           s"(expected '$File', '$InProcess', '$ZkPrefix<connectString>' " +
           s"or '$HmsPrefix<connect>')")
     }
   }
+
+  def providerFor(timeline: Timeline, staleMs: Long = 60000): LockProvider =
+    // only the not-yet-initialized bootstrap may default; a config READ
+    // failure on a live table must propagate — silently falling back to
+    // the file provider would break mutual exclusion with peers that
+    // did read 'inprocess'
+    parse(if (!timeline.exists) null else timeline.config.lockProvider) match {
+      case (File, _)      => new FileLockProvider(timeline, staleMs)
+      case (InProcess, _) => new InProcessLockProvider(timeline.basePath)
+      // shared long-lived ZK session per connect string; only the
+      // mutex + fence marker are per-commit (see ZkLockProvider.cached)
+      case (ZkPrefix, connect) => ZkLockProvider.cached(connect, timeline.basePath)
+      case (_, connect)        => new HmsLockProvider(connect, timeline.basePath)
+    }
 }
 
 /** The writer's lock session/lease was lost between acquiring the

@@ -940,10 +940,10 @@ object TableFormat {
                CAST(sum(floor(price * 100)) AS BIGINT) AS price_c
         FROM final_state GROUP BY o_orderpriority ORDER BY o_orderpriority"""))),
 
-    // ---- publish tail at many file groups: a tiny file target forces
-    //      ~2000 groups (sf0.1) through stage → footer-stats → rename in
-    //      ONE commit (the bench's write-tail scale probe; the rename
-    //      pool is what keeps this tail flat)
+    // ---- write tail at many file groups: a tiny file target forces
+    //      ~2000 groups (sf0.1) through the per-group write in ONE
+    //      commit, each file written once at its committed name (the
+    //      bench's write-tail scale probe)
     "q57_publish_many_groups" -> ((
       (s: SparkSession, d: String) => {
         val orders = graft.Tables.t(s, d, "orders")
@@ -961,13 +961,9 @@ object TableFormat {
         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"""))),
 
     // ---- q57 under the OBJECT-STORE commit profile: same many-group
-    //      bulk_insert, but every data-file "move" is a copy (no atomic
-    //      rename) and exclusivity is a conditional write. Publication
-    //      runs as a distributed Spark job (the commit has more groups
-    //      than the driver publish pool), so the copy BYTES never transit
-    //      the driver
-    //      — this is the profile's perf gate next to q118's sf0.01
-    //      correctness gate
+    //      bulk_insert, with exclusivity from a conditional write and no
+    //      rename-as-move anywhere in the commit — this is the profile's
+    //      perf gate next to q118's sf0.01 correctness gate
     "q180_publish_put_profile" -> ((
       (s: SparkSession, d: String) => {
         val orders = graft.Tables.t(s, d, "orders")
@@ -2695,9 +2691,9 @@ object TableFormat {
     //      hoodie.cleaner.policy.failed.writes,
     //      HoodieCompactionConfig.java:214 + rollbackFailedWrites,
     //      AbstractHoodieWriteClient.java:916): a writer crashed mid-
-    //      publish, leaving a pending inflight instant, staged tmp files
-    //      and one data file already renamed to its final (uncommitted)
-    //      name. The next write rolls it all back automatically; the
+    //      write, leaving a pending inflight instant, one data file at
+    //      its final (uncommitted) name and a `.graft/.tmp` staging tree
+    //      (what a crash under an older, staging build left behind). The next write rolls it all back automatically; the
     //      table state is exactly as if the crash never happened
     // ---- streaming CDC: the change-stream mode of the stream source
     //      (query.type=cdc). Three commits -> three micro-batches: the
@@ -3293,15 +3289,15 @@ object TableFormat {
         touch(new org.apache.hadoop.fs.Path(metaDir, s"$crashT.commit.inflight"), "{}")
         val staged = new org.apache.hadoop.fs.Path(metaDir, s".tmp/$crashT/part-junk")
         touch(staged, "staged-bytes")
-        // the orphan lands in a REAL partition dir, as a mid-publish
+        // the orphan lands in a REAL partition dir, as a mid-write
         // crash would leave it
         val partDir = fsys.listStatus(new org.apache.hadoop.fs.Path(tbl.basePath))
           .filter(_.isDirectory).map(_.getPath)
           .filterNot(_.getName == graft.core.Timeline.MetaDir).head
         val orphan = new org.apache.hadoop.fs.Path(partDir, s"deadbeef-0_$crashT.parquet")
         touch(orphan, "orphan-bytes")
-        // the next writes trigger the cleanup (policy auto -> eager on
-        // this single-writer table), then apply the usual mutations
+        // the next writes trigger the cleanup (eager on this
+        // single-writer, non-occ table), then apply the usual mutations
         tbl.upsert(orders.filter(col("o_orderkey") % 10 >= 6)
           .withColumn("o_totalprice", col("o_totalprice") + 1000))
         tbl.delete(orders.filter(col("o_orderkey") % 10 === 7)

@@ -174,7 +174,7 @@ class TableServices(table: GraftTable) {
     * compactor's own OCC). Groups that received deltas with a LATER
     * instant time keep them stacked on the new base (they fold in the
     * next round). Publication happens under the timeline lock and
-    * re-verifies the fold is still complete; on a lost race the staged
+    * re-verifies the fold is still complete; on a lost race the written
     * files are discarded and the merge retries. Safe to run concurrently
     * with ongoing upserts. */
   def runScheduledCompaction(time: String): Option[String] = {
@@ -227,7 +227,7 @@ class TableServices(table: GraftTable) {
       val extraPaths = extras.map(_.path).toSet
       val schema = table.readSchema(snap)
       val merged = table.mergeLatest(table.readStatsDf(schema, plan ++ extras))
-      val stats = table.stageAndPublish(merged, time,
+      val stats = table.writeGroups(merged, time,
         groups = Some((plan ++ extras).map(s => (s.partition, s.fileId)).distinct.size))
       val written = stats.map(s => (s.partition, s.fileId)).toSet
       val published = new TimelineLock(timeline).withLock {
@@ -252,7 +252,7 @@ class TableServices(table: GraftTable) {
       }
       if (published) return Some(time)
       // lost the race: a writer landed an earlier-time file after the
-      // merge read its inputs — discard the staged output and re-merge
+      // merge read its inputs — discard the written output and re-merge
       stats.foreach(st => GraftTable.deleteDataFile(fs, abs(st)))
       attempt += 1
     }
@@ -411,7 +411,7 @@ class TableServices(table: GraftTable) {
       .withColumn(File, concat(lit(s"c$time-"), spark_partition_id().cast("string")))
       .drop(rankCols: _*)
 
-    val written = table.stageAndPublish(assigned, time, groups = Some(nb))
+    val written = table.writeGroups(assigned, time, groups = Some(nb))
     val published = new TimelineLock(timeline).withLock {
       // every pinned file must still be the live base of its group (no
       // replace/rewrite slipped past the reject strategy)
@@ -904,7 +904,9 @@ class TableServices(table: GraftTable) {
 
   /** Undo the LATEST data instant (or a pending one): delete the files it
     * wrote, drop its timeline entry, record a `rollback` instant
-    * (reference analog: BaseRollbackActionExecutor.java:53). */
+    * (reference analog: BaseRollbackActionExecutor.java:53). A pending
+    * instant lists no files, so its files are found the way the
+    * failed-write reaper finds a crashed write's ([[orphanDataFiles]]). */
   def rollback(time: String): String = {
     val all = timeline.instants().filter(i => Action.dataActions(i.action))
     val target = all.find(_.time == time)
@@ -922,10 +924,7 @@ class TableServices(table: GraftTable) {
         .foreach(i => timeline.deletePending(i.time, i.action))
       dropCheckpointsFrom(time)
       remintCoveringCheckpoint()
-    } else {
-      timeline.deletePending(target.time, target.action)
-      fs.delete(new Path(table.basePath, s"${Timeline.MetaDir}/.tmp/${target.time}"), true)
-    }
+    } else rollbackFailedWrite(target)
     val t = timeline.start(Action.Rollback)
     timeline.complete(t, Action.Rollback,
       CommitMetadata("rollback", extra = Map("target" -> time)))
@@ -946,27 +945,20 @@ class TableServices(table: GraftTable) {
     * (getInstantsToRollback builds from the inflight timeline excluding
     * compaction and clustering, AbstractHoodieWriteClient.java:953).
     *
-    * Policy (config.failedWritesPolicy): `eager` rolls back every such
-    * instant (single-writer semantics); `lazy` only those whose
-    * heartbeat expired — safe with concurrent writers, whose live
-    * heartbeats protect them; `none` disables; `auto` (default) =
-    * eager on non-OCC tables, lazy on OCC tables.
+    * Policy, derived from `occ`: without it, every such instant is
+    * rolled back (`eager`, single-writer semantics); with it, only those
+    * whose heartbeat expired (`lazy`) — safe with concurrent writers,
+    * whose live heartbeats protect them.
     *
     * Per doomed instant, under the timeline lock (re-verifying it is
-    * still pending): delete the staged tmp dir, delete any data files a
-    * crash mid-publish already renamed to final names (found by an
-    * instant-suffix walk of the table tree — a recursive listing is
-    * acceptable on this rare crash-recovery path; normal writes never
-    * list), drop the pending marker + heartbeat, and record a
-    * `rollback` instant for audit. Returns the rolled-back times. */
+    * still pending): delete every data file and write temp the crashed
+    * write left at its committed names (found by an instant-suffix walk
+    * of the table tree — a recursive listing is acceptable on this rare
+    * crash-recovery path; normal writes never list), drop the pending
+    * marker + heartbeat, and record a `rollback` instant for audit.
+    * Returns the rolled-back times. */
   def rollbackFailedWrites(curInstant: Option[String] = None): Seq[String] = {
     val c = table.config
-    val policy = Option(c.failedWritesPolicy).map(_.trim.toLowerCase)
-      .filter(_.nonEmpty).getOrElse("auto") match {
-      case "auto" => if (c.occ) "lazy" else "eager"
-      case p      => p
-    }
-    if (policy == "none") return Nil
     // floor at 2x the refresh cadence regardless of config (see
     // GraftTable.validateConfig): a ttl inside the refresh window would
     // reap LIVE writers whose heartbeat simply hasn't ticked yet
@@ -995,19 +987,15 @@ class TableServices(table: GraftTable) {
       .filter(i => published.contains((i.time, i.action)) &&
         Heartbeat.isExpired(timeline, i.time, ttl) && instantAgeMs(i.time) > ttl)
       .foreach(i => timeline.deletePending(i.time, i.action))
-    val doomed = policy match {
-      case "eager" => pending
-      case "lazy" =>
+    val doomed =
+      if (!c.occ) pending
+      else
         // the instant-age gate closes the mint→heartbeat-create window: a
         // just-minted peer whose heartbeat file doesn't exist YET must not
         // read as crashed (instant times are UTC wall-clock, so age is
         // computable without any state)
         pending.filter(i => Heartbeat.isExpired(timeline, i.time, ttl) &&
           instantAgeMs(i.time) > ttl)
-      case other => throw new IllegalArgumentException(
-        s"unknown failedWritesPolicy '$other' " +
-          "(expected 'auto', 'eager', 'lazy' or 'none')")
-    }
     doomed.flatMap { i =>
       val undone = new TimelineLock(timeline).withLock {
         // the owner may have published (or aborted) between listing and
@@ -1038,30 +1026,33 @@ class TableServices(table: GraftTable) {
       System.currentTimeMillis() - t.toEpochMilli
     } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
 
-  /** Physical cleanup of one crashed write instant (caller holds the
-    * timeline lock and has verified the instant is still pending). */
+  /** Physical cleanup of one pending write instant (the reaper holds the
+    * timeline lock and has verified the instant is still pending). The
+    * `.graft/.tmp/<t>` delete reaps a staging tree left by a write that
+    * crashed under an older build, which staged files there first. */
   private def rollbackFailedWrite(i: Instant): Unit = {
     fs.delete(new Path(table.basePath, s"${Timeline.MetaDir}/.tmp/${i.time}"), true)
     orphanDataFiles(i.time).foreach(p => GraftTable.deleteDataFile(fs, p))
     timeline.deletePending(i.time, i.action)
   }
 
-  /** Data files carrying `_<instant>` in their published names, found by
-    * walking the table tree (skipping `.graft`). Only the crash-recovery
-    * path pays this listing. */
+  /** Data files carrying `_<instant>` in their committed names, and the
+    * dot-prefixed temps beside them, found by walking the table tree
+    * (skipping `.graft`). Only the crash-recovery path pays this
+    * listing. */
   private def orphanDataFiles(time: String): Seq[Path] = {
     val suffixes =
       Seq(s"_$time.parquet", s"_$time.delta.parquet",
         s"_$time.orc", s"_$time.delta.orc")
-    // a publish promote that crashed mid-copy leaves its attempt-unique
-    // temp (`.<dest>.put<nanos>t<tid>`, ConditionalPutCommitStore
-    // .moveFile) in the PARTITION dir — hidden from readers (dot-file,
-    // and never in commit metadata) but garbage until this instant's
-    // failed-write cleanup reaps it with the instant
+    // a write task that crashed mid-file leaves its temp
+    // (`.<name>.tmp-<attempt>`, GroupedFileWriter.write) beside the
+    // committed name, and a copy promote under an older build left
+    // `.<name>.put<nanos>t<tid>` — hidden from readers (dot-file, and
+    // never in commit metadata) but garbage until this instant's cleanup
+    // reaps it with the instant
     def matches(name: String): Boolean =
       suffixes.exists(sfx =>
-        name.endsWith(sfx) ||
-          (name.startsWith(".") && name.contains(sfx + ".put")))
+        name.endsWith(sfx) || (name.startsWith(".") && name.contains(sfx + ".")))
     def walk(dir: Path): Seq[Path] = {
       val entries =
         try fs.listStatus(dir).toSeq

@@ -42,8 +42,8 @@ import graft.write.GraftTable
   *   commit.store             rename (default) | put — storage profile
   *   lock.provider            file (default) | inprocess | zk:<connect> |
   *                            hms:<connect>
-  *   failed.writes.policy     auto (default) | eager | lazy | none
-  *   heartbeat.ttl.ms         lazy-policy heartbeat expiry (0 = default)
+  *   heartbeat.ttl.ms         heartbeat expiry for failed-write cleanup
+  *                            under occ (0 = default)
   */
 class GraftDataSource
   extends RelationProvider
@@ -204,8 +204,6 @@ class GraftDataSource
         baseFormat = parameters.getOrElse("base.format", "parquet"),
         strictSchema = parameters.getOrElse("strict.schema", "false").toBoolean,
         lockProvider = parameters.getOrElse("lock.provider", "file"),
-        failedWritesPolicy =
-          parameters.getOrElse("failed.writes.policy", "auto"),
         heartbeatTtlMs =
           parameters.getOrElse("heartbeat.ttl.ms", "0").toLong,
         checkpointKeep =

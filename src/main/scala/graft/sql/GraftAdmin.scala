@@ -197,7 +197,7 @@ object GraftExporter {
     * queryable/writable with full engine semantics (reference analog:
     * HoodieSnapshotCopier.java:56 — latest files + commit metadata to a
     * backup dir). File copies are metadata-driven (never a directory
-    * listing) and run on the driver's publish pool. */
+    * listing) and run on a driver thread pool. */
   def copyTable(
       table: GraftTable,
       destDir: String,

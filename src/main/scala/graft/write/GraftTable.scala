@@ -22,18 +22,15 @@ object Meta {
   val File = "_g_file"
   val Deleted = "_g_deleted"
   val all: Seq[String] = Seq(CommitTime, Seqno, Key, Partition, File, Deleted)
-  /** staging-only duplicates used for partitionBy (partitionBy strips its
-    * columns from file contents; we want them stored too) */
+  /** write-only grouping columns: the writer groups rows into files by
+    * these and strips them from file contents, so the meta columns they
+    * copy stay stored (or are shed, under virtual keys) independently */
   val GP = "_gp"
   val GF = "_gf"
-  /** staging-only delta flag: lets ONE staged write carry base and delta
-    * groups together (a MOR upsert lands update deltas and fresh-group
-    * bases in a single Spark job instead of two) */
+  /** write-only delta flag: lets ONE write carry base and delta groups
+    * together (a MOR upsert lands update deltas and fresh-group bases in
+    * a single Spark job instead of two) */
   val GD = "_gd"
-  /** sentinel staging dir value for the empty (non-partitioned) path —
-    * Spark writes empty-string partition values to the default-partition
-    * dir, so we substitute a printable token and decode on publish */
-  val RootPartition = "__ROOT__"
   /** path segment standing in for a NULL partition-field value (reference
     * analog: hive.exec.default.partition.name /
     * keygen/KeyGenUtils.java DEFAULT_PARTITION_PATH handling) — without
@@ -50,7 +47,8 @@ object Meta {
   * BaseSparkCommitActionExecutor.java:146, re-expressed without the
   * RDD/Avro IR): prepare (key/partition exprs + intra-batch dedup) →
   * tag via key-index join → bucket assignment → window-merge per file
-  * group → staged parquet write → atomic commit publish.
+  * group → one file per group at its committed name → atomic instant
+  * completion.
   */
 class GraftTable private (
     val spark: SparkSession,
@@ -268,20 +266,9 @@ class GraftTable private (
   }
 
   // =========================================================================
-  // physical write: stage → stats → publish
+  // physical write: one file per group, at its committed name
   // =========================================================================
 
-  /** Write `df` (which must carry all meta columns incl. `_g_file`) into
-    * the table layout: staged `partitionBy(partition, fileGroup, delta)`
-    * parquet write, one file per group (rows are co-located by the
-    * repartition), then rename into
-    * `<partition>/<fileId>_<commit>[.delta].parquet`. Returns per-file
-    * WriteStats.
-    *
-    * A pre-existing boolean `_gd` column overrides `delta` PER ROW, so
-    * one staged write (one Spark job) can carry delta and base groups
-    * together — the MOR upsert path lands update deltas and fresh-group
-    * bases in a single job. A group must be all-delta or all-base. */
   /** Label the jobs an action spawns (guide §1.5) — a multi-job commit
     * is unreadable in the UI without them. Thread-local, restored after
     * the action. */
@@ -292,26 +279,36 @@ class GraftTable private (
     try body finally sc.setJobDescription(prev)
   }
 
-  private[graft] def stageAndPublish(
+  /** Write `df` (which must carry all meta columns incl. `_g_file`) into
+    * the table layout: one file per file group (rows are co-located by
+    * the repartition), written once, straight at its committed name
+    * `<partition>/<fileId>_<commit>[.delta].<ext>`. Returns per-file
+    * WriteStats. Nothing is visible until the caller completes the
+    * instant that lists them.
+    *
+    * A pre-existing boolean `_gd` column overrides `delta` PER ROW, so
+    * one write (one Spark job) can carry delta and base groups
+    * together — the MOR upsert path lands update deltas and fresh-group
+    * bases in a single job. A group must be all-delta or all-base. */
+  private[graft] def writeGroups(
       df: DataFrame,
       commitTime: String,
       delta: Boolean = false,
       /** df carries a boolean `_gd` column routing each group to delta
-        * or base; costs one extra staging dir level, so only mixed
+        * or base; costs one extra grouping column, so only mixed
         * writers opt in */
       mixed: Boolean = false,
       /** upper bound on the number of file groups in `df`, when the
         * caller knows it (bucket plan size, pruned index candidates,
-        * service plan size) — caps the staging shuffle's partition count
+        * service plan size) — caps the write shuffle's partition count
         * so a small commit does not schedule `shufflePartitions` mostly
         * empty write tasks. None = unknown, full width. */
       groups: Option[Int] = None): Seq[WriteStat] = {
-    val stagingDir = new Path(basePath, s"${Timeline.MetaDir}/.tmp/$commitTime")
     // partition-field columns leave the stored schema here (their values
     // live on in the _g_partition path + the synthesized per-group stats
     // below), and virtual-keys tables shed ALL meta columns; every
     // writer — upsert, compaction, clustering — funnels through this one
-    // staging point, so the invariant holds table-wide
+    // write point, so the invariant holds table-wide
     val droppedPartCols: Seq[String] =
       if (config.dropPartitionColumns) config.partitionFields.filter(df.columns.contains)
       else Nil
@@ -322,25 +319,25 @@ class GraftTable private (
     // explicit partition count: an implicit repartition(cols) is subject
     // to AQE coalescing, which at many-small-groups commits folds the
     // write into ONE task that opens thousands of parquet writers
-    // serially — the staged write must keep cluster-wide parallelism
-    // (hash co-location of a group into one task holds at any count).
+    // serially — the write must keep cluster-wide parallelism (hash
+    // co-location of a group into one task holds at any count).
     // When the caller knows the commit's group count, cap the width at
     // 2× that (the 2× absorbs hash collisions): a 3-group trickle commit
     // then schedules ~6 write tasks instead of `shufflePartitions`
     // mostly-empty ones, while a 100k-group commit keeps full width —
     // scale-adaptive in both directions (guide §2).
     val shufflePartitions = spark.sessionState.conf.numShufflePartitions
-    val stagingParts = groups match {
+    val writeParts = groups match {
       case Some(g) => math.min(shufflePartitions.toLong, 2L * math.max(1, g)).toInt
       case None    => shufflePartitions
     }
     // GP/GF/sort derive from the meta columns, so the projection that
     // sheds dropped columns from file contents goes AFTER the sort (a
     // narrow projection preserves within-partition order)
-    val staged = df
-      .withColumn(GP, when(col(Partition) === "", lit(RootPartition)).otherwise(col(Partition)))
+    val grouped = df
+      .withColumn(GP, col(Partition))
       .withColumn(GF, col(File))
-      .repartition(stagingParts, col(GP), col(GF))
+      .repartition(writeParts, col(GP), col(GF))
       .sortWithinPartitions(col(GP), col(GF), col(Key))
       .drop(dropped: _*)
     // timestamps must be stored as INT64 micros: Spark's default (INT96)
@@ -357,114 +354,52 @@ class GraftTable private (
       spark.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
 
     // Per-file stats are accumulated from the ROWS as the writing task
-    // streams them into each file (graft.write.RowStats) — the staged
-    // write's manifest then needs NO re-open of the just-written file
-    // (a footer re-read measured ~6-9 ms/file, 6× the parquet write
-    // itself at small files; see OPTIMIZATION_r13.md). Encodings mirror
-    // the footer decoders exactly (corner cases fall back to the footer
-    // read per file), so StatsSkipping.compare and SHOW COLUMN STATS see
+    // streams them into each file (graft.write.RowStats) — the write's
+    // manifest then needs NO re-open of the just-written file (a footer
+    // re-read measured ~6-9 ms/file, 6× the parquet write itself at
+    // small files; see OPTIMIZATION_r13.md). Encodings mirror the footer
+    // decoders exactly (corner cases fall back to the footer read per
+    // file), so StatsSkipping.compare and SHOW COLUMN STATS see
     // byte-identical values. Reference analog: HoodieWriteStat
     // accounting, populated by the write handles during the write.
     val statsCols = config.statsColumns.filter(data.columns.contains)
     val statTypes: Map[String, DataType] =
       (Key +: statsCols).flatMap(c =>
         data.schema.fields.find(_.name == c).map(f => c -> f.dataType)).toMap
-    val hconf = spark.sessionState.newHadoopConf()
 
-    val stagingCols = if (mixed) Seq(GP, GF, GD) else Seq(GP, GF)
-    // Staged write runs through the direct per-group writer, NOT
+    val groupCols = if (mixed) Seq(GP, GF, GD) else Seq(GP, GF)
+    val toWrite =
+      if (mixed) grouped.withColumn(GD, col(GD).cast("string")) else grouped
+    // The write runs through the direct per-group writer, NOT
     // DataFrameWriter.partitionBy: the Hadoop commit protocol costs a
     // temp dir + task-commit rename + job-commit merge walk PER FILE,
     // which at a many-group commit (file-per-group layout) measured ~2.5×
     // the actual parquet work (see GroupedFileWriter + the experiment
-    // record in OPTIMIZATION_r12.md). The staging DIRECTORY is already
-    // the transaction — a retried commit attempt must not inherit a
-    // previous attempt's files, so clear it first (same contract
-    // mode("overwrite") provided).
-    fs.delete(stagingDir, true)
-    fs.mkdirs(stagingDir)
-    val toStage =
-      if (mixed) staged.withColumn(GD, col(GD).cast("string")) else staged
-    // the write job returns the staged MANIFEST: (path, rows, bytes,
-    // column stats) per file, so publish is pure moves and the driver
-    // does zero per-file I/O over the staging tree
-    val types = statTypes
-    val isOrc = config.dataFormat == "orc"
-    val manifest: Seq[(String, (Long, Long, Map[String, ColStat]))] =
+    // record in OPTIMIZATION_r12.md). Each group's committed name is
+    // computed in the writing task from its group values; the closure
+    // captures plain values only (this table is not serializable).
+    val ext = config.dataFormat
+    val isDelta: Seq[String] => Boolean = g => if (mixed) g(2).toBoolean else delta
+    val relPath: Seq[String] => String = { g =>
+      val name = s"${g(1)}_$commitTime${if (isDelta(g)) ".delta" else ""}.$ext"
+      if (g(0).isEmpty) name else s"${g(0)}/$name"
+    }
+    val isOrc = ext == "orc"
+    // the write job returns the MANIFEST: (group values, (rows, bytes,
+    // column stats)) per file — the driver does zero per-file I/O
+    val manifest: Seq[(Seq[String], (Long, Long, Map[String, ColStat]))] =
       withJobDesc(s"stage $commitTime")(
         org.apache.spark.sql.graft.GroupedFileWriter.write(
-          spark, toStage, stagingCols, stagingDir.toString, config.dataFormat,
-          (dataSchema: StructType) => new RowStats.Collector(types, isOrc, dataSchema)))
+          spark, toWrite, groupCols, basePath, ext, relPath,
+          (dataSchema: StructType) => new RowStats.Collector(statTypes, isOrc, dataSchema)))
 
-    // empty input stages no files at all; nothing to publish
-    if (manifest.isEmpty) {
-      fs.delete(stagingDir, true)
-      return Nil
-    }
-    val infoBySrc: Map[String, (Long, Long, Map[String, ColStat])] = manifest.toMap
-    val byGroup: Map[Path, Seq[Path]] =
-      manifest.map(m => new Path(m._1)).groupBy(_.getParent)
-
-    // resolve every group's published destination on the driver first —
-    // pure path math over the glob result, no I/O
-    case class Move(src: Path, dest: Path, part: String, fileId: String,
-      isDelta: Boolean, rel: String)
-    val moves: Seq[Move] = byGroup.toSeq.map { case (gDir, parts) =>
-      val isDelta =
-        if (mixed) gDir.getName.stripPrefix(s"$GD=").toBoolean else delta
-      val fDir = if (mixed) gDir.getParent else gDir
-      val fileId = unescapePath(fDir.getName.stripPrefix(s"$GF="))
-      val partRaw = unescapePath(
-        fDir.getParent.getName.stripPrefix(s"$GP="))
-      val part = if (partRaw == RootPartition) "" else partRaw
-      require(parts.size == 1,
-        s"expected 1 staged file per group, got ${parts.size} in $gDir")
-      val suffix =
-        if (isDelta) s"_$commitTime.delta.${config.dataFormat}"
-        else s"_$commitTime.${config.dataFormat}"
-      val destDir = if (part == "") new Path(basePath) else new Path(basePath, part)
-      val dest = new Path(destDir, s"$fileId$suffix")
-      val rel = if (part == "") dest.getName else s"$part/${dest.getName}"
-      Move(parts.head, dest, part, fileId, isDelta, rel)
-    }
-
-    // Publication vehicle. With per-file accounting already collected by
-    // the staged write, publish is PURE MOVES (profile-dependent: rename,
-    // or a byte copy under `put` — see graft.core.CommitStore): at
-    // 100k-file commits a driver-side loop is still the publish tail, and
-    // under `put` the commit's whole data volume would transit one JVM.
-    // Small commits stay on the cheap driver pool; a commit wider than
-    // the pool, or a `put` commit with a non-trivial byte volume, is
-    // distributed as a Spark job.
-    val distribute = GraftTable.publishDistributedOverride.getOrElse(
-      moves.size > GraftTable.PublishThreads ||
-        (timeline.commitStore.name == CommitStore.Put &&
-          manifest.map(_._2._2).sum > GraftTable.PutDriverCopyMaxBytes))
-    // one mkdirs per destination PARTITION directory (not per file):
-    // on a real store every mkdirs is a metadata RPC
-    moves.map(_.dest.getParent).distinct.foreach(fs.mkdirs(_))
-    if (distribute)
-      withJobDesc(s"publish ${moves.size} files $commitTime")(
-        GraftTable.publishDistributed(spark,
-          moves.map(m => (m.src.toString, m.dest.toString)),
-          timeline.commitStore.name, new SerializableHadoopConf(hconf)))
-    else {
-      // driver-side pool (Hadoop FileSystem instances are thread-safe)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(GraftTable.PublishThreads, math.max(1, moves.size)))
-      try moves.map { m =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = {
-            timeline.commitStore.moveFile(fs, m.src, m.dest)
-            GraftTable.onPublishedMove(m.dest.toString)
-          }
-        })
-      }.foreach(_.get())
-      finally pool.shutdown()
-    }
-
-    val out = moves.map { m =>
-      val (rows, bytes, colStats) = infoBySrc(m.src.toString)
+    // a group split across tasks would write one committed name twice,
+    // the later file silently replacing the earlier one's rows
+    val rels = manifest.map(m => relPath(m._1))
+    require(rels.distinct.size == rels.size,
+      s"two file groups share a committed name: ${rels.diff(rels.distinct).take(3)}")
+    val out = manifest.zip(rels).map { case ((g, (rows, bytes, colStats)), rel) =>
+      val part = g(0)
       val keyStat = colStats.get(Key)
       // a file group lives in exactly ONE partition, so each
       // dropped partition field is single-valued in this file:
@@ -474,7 +409,7 @@ class GraftTable private (
       val partStats: Map[String, ColStat] =
         if (droppedPartCols.isEmpty) Map.empty
         else {
-          val segs = m.part.split("/", -1)
+          val segs = part.split("/", -1)
           // segment position = the field's position in the FULL
           // partition spec (a batch carrying only a subset of
           // the partition columns must not shift the mapping)
@@ -490,24 +425,23 @@ class GraftTable private (
             }
           }.toMap
         }
-      WriteStat(m.part, m.fileId, m.rel, isDelta = m.isDelta, rows = rows, bytes = bytes,
+      WriteStat(part, g(1), rel, isDelta = isDelta(g), rows = rows, bytes = bytes,
         minKey = keyStat.flatMap(s => Option(s.min)).getOrElse(""),
         maxKey = keyStat.flatMap(s => Option(s.max)).getOrElse(""),
         columnStats = colStats.filter { case (c, _) => c != Key } ++ partStats)
     }
-    fs.delete(stagingDir, true)
     if (config.bloomIndex && out.nonEmpty) buildBlooms(out)
     out
   }
 
-  /** Build one key bloom per just-published file and write it as a
+  /** Build one key bloom per just-written file and write it as a
     * `<file>.bloom` sidecar — a distributed job reading ONLY the key
     * column of the commit's own output (columnar single-column scan; the
     * reference streams keys into the filter inside its write handle, an
     * option Spark's writer doesn't expose — one narrow extra pass over
     * freshly written, page-cache-warm files buys the same index). Blooms
     * are sized from each file's ACTUAL row count (already known from its
-    * parquet footer) at the configured fpp. Grouping by file is a
+    * parquet footer) at [[KeyBloom.Fpp]]. Grouping by file is a
     * keys-only shuffle, so correctness never depends on Spark's input
     * split planning (a row-group-split file would otherwise build a
     * partial filter). */
@@ -517,7 +451,6 @@ class GraftTable private (
     if (native.isEmpty) return
     val rowsByName: Map[String, Long] =
       native.map(st => new Path(st.path).getName -> st.rows).toMap
-    val fpp = config.bloomFpp
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     val keyOnly = StructType(Seq(
       org.apache.spark.sql.types.StructField(Key, org.apache.spark.sql.types.StringType)))
@@ -528,21 +461,13 @@ class GraftTable private (
       .mapGroups { (file, it) =>
         val uri = new java.net.URI(file)
         val dataPath = new Path(uri)
-        val bloom = KeyBloom.sized(rowsByName.getOrElse(dataPath.getName, 1L), fpp)
+        val bloom = KeyBloom.sized(rowsByName.getOrElse(dataPath.getName, 1L))
         it.foreach(kv => bloom.add(kv._2))
         KeyBloom.write(org.apache.hadoop.fs.FileSystem.get(uri, conf.value), dataPath, bloom)
         file
       }
       .collect()
   }
-
-  /** Match Spark's partition-dir escaping so staged dirs resolve. */
-  private def escapePath(s: String): String =
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(s)
-
-  /** Inverse of [[escapePath]] for reading staged dir names back. */
-  private def unescapePath(s: String): String =
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(s)
 
   // =========================================================================
   // bucket assignment for inserts
@@ -551,7 +476,7 @@ class GraftTable private (
   /** Marker column emitted by [[assignInsertGroups]]: true when the row
     * was routed to a brand-new file group (vs filled into an existing
     * under-sized one). Callers must route fill rows through the group's
-    * rewrite/delta path and drop the marker before staging. */
+    * rewrite/delta path and drop the marker before the write. */
   private[graft] val NewGroup = "_g_newgrp"
 
   /** Effective rows-per-file target. Byte-configured tables convert
@@ -642,7 +567,7 @@ class GraftTable private (
     * hash-proportional to each bucket's remaining capacity, so no
     * per-row driver work and no extra shuffle. */
   /** Returns the routed frame AND the total number of target groups in
-    * the plan (fills + new buckets) — the staging shuffle's width cap. */
+    * the plan (fills + new buckets) — the write shuffle's width cap. */
   private def assignInsertGroups(
       df: DataFrame, commitTime: String,
       fillsByPart: Map[String, Seq[(String, Long)]] = Map.empty,
@@ -928,7 +853,7 @@ class GraftTable private (
       .repartition(joinKeyCols: _*)
       .distinct(),
       // candidate GROUP count (the tag join can only route updates into
-      // these groups) — the staging shuffle's width cap for update-paths
+      // these groups) — the write shuffle's width cap for update-paths
       stats.map(_.fileId).distinct.size)
   }
 
@@ -1029,7 +954,7 @@ class GraftTable private (
   /** Commit finalization for every public write op: run pre-commit
     * validators over the before/hypothetical-after snapshot views, then
     * complete the instant (through the OCC guard when `guarded`). A
-    * validator failure removes the staged files and the pending instant
+    * validator failure removes the written files and the pending instant
     * — the bad batch never becomes visible (reference analog:
     * SparkPreCommitValidator.java:72; failure → rollback of the inflight
     * instant). */
@@ -1158,14 +1083,19 @@ class GraftTable private (
   // public write operations
   // =========================================================================
 
-  /** Mint a write instant: first roll back crashed writers per the
-    * table's failed-writes policy (reference analog: the reference runs
+  /** Mint a write instant: first check the lock setting's form and roll
+    * back crashed writers (reference analog: the reference runs
     * rollbackFailedWrites at the start of every commit —
     * AbstractHoodieWriteClient.java:780,916), then open the inflight
     * instant and start its liveness heartbeat ([[graft.core.Heartbeat]]).
     * A cleanup failure is logged, not thrown: hygiene must never block a
     * healthy write (same stance as the inline-services error handling). */
   private def startWrite(action: String): String = {
+    // a malformed lockProvider fails here, before the instant is minted
+    // and any file is written (a table.json may predate the create-time
+    // check, or name a provider this build dropped). Read from storage,
+    // as the commit-point lock reads it.
+    TimelineLock.parse(timeline.config.lockProvider)
     try {
       val cleaned = graft.services.TableServices(this).rollbackFailedWrites()
       if (cleaned.nonEmpty)
@@ -1217,7 +1147,7 @@ class GraftTable private (
       case "global" => prepared.orderBy(col(Partition), col(Key))
       case _        => prepared
     }
-    val stats = stageAndPublish(sorted, t, groups = Some(nGroups))
+    val stats = writeGroups(sorted, t, groups = Some(nGroups))
     finishCommit(t, Action.Commit,
       CommitMetadata("bulk_insert",
         reconciledSchemaJson(schemaSnap, prepared),
@@ -1254,14 +1184,14 @@ class GraftTable private (
           fillRows.select(File).distinct().collect()).map(_.getString(0)).toSet
       val stats =
         if (usedFillIds.isEmpty)
-          stageAndPublish(assigned.drop(NewGroup), t, groups = Some(nGroups))
+          writeGroups(assigned.drop(NewGroup), t, groups = Some(nGroups))
         else {
           val oldStats = snap.toSeq.flatMap(_.slices)
             .filter(s => usedFillIds.contains(s.fileId)).flatMap(_.allFiles)
           val merged = mergeLatestKeepTombstones(
             readStatsDf(readSchema(snap.get), oldStats)
               .unionByName(fillRows, allowMissingColumns = true))
-          stageAndPublish(merged.unionByName(freshRows, allowMissingColumns = true), t,
+          writeGroups(merged.unionByName(freshRows, allowMissingColumns = true), t,
             groups = Some(nGroups))
         }
       val meta = CommitMetadata("insert",
@@ -1326,10 +1256,10 @@ class GraftTable private (
           // MOR: updates — and inserts filled into existing small groups
           // (bin packing) — land as delta files on their group; no base
           // read. Fresh groups open as base files. Both land in ONE
-          // staged write via the per-row delta flag (one Spark job, not
-          // two; the flag routes each group to its suffix at publish).
+          // write via the per-row delta flag (one Spark job, not two;
+          // the flag gives each group its file-name suffix).
           val deltas = if (fills.isEmpty) updates else updates.unionByName(fillIns)
-          stageAndPublish(
+          writeGroups(
             deltas.withColumn(GD, lit(true))
               .unionByName(inserts.withColumn(GD, lit(false))), t, mixed = true,
             // updates can only land in the index's candidate groups
@@ -1353,7 +1283,7 @@ class GraftTable private (
             else mergeLatestKeepTombstones(
               readStatsDf(readSchema(snap), oldStats)
                 .unionByName(incoming, allowMissingColumns = true))
-          stageAndPublish(
+          writeGroups(
             merged.unionByName(inserts, allowMissingColumns = true), t,
             groups = Some(affected.size + nNew))
         }
@@ -1410,7 +1340,7 @@ class GraftTable private (
       rejectPinnedTargets(tagged, "delete", pendingClusteringGroups())
       val (stats, replaced) =
         if (isMor)
-          (stageAndPublish(tagged, t, delta = true, groups = Some(candGroups)),
+          (writeGroups(tagged, t, delta = true, groups = Some(candGroups)),
             Map.empty[String, Seq[String]])
         else {
           val affected = withJobDesc("affected groups")(
@@ -1424,7 +1354,7 @@ class GraftTable private (
             val old = readStatsDf(readSchema(snap), slices.flatMap(_.allFiles))
             val merged = mergeLatestKeepTombstones(
               old.unionByName(tagged, allowMissingColumns = true))
-            (stageAndPublish(merged, t, groups = Some(affected.size)),
+            (writeGroups(merged, t, groups = Some(affected.size)),
               Map.empty[String, Seq[String]])
           }
         }
@@ -1447,7 +1377,7 @@ class GraftTable private (
       targetRows = effectiveTargetRows(Some(snap)))
     val prepared = routed.drop(NewGroup)
     val parts = prepared.select(Partition).distinct().collect().map(_.getString(0)).toSet
-    val stats = stageAndPublish(prepared, t, groups = Some(nGroups))
+    val stats = writeGroups(prepared, t, groups = Some(nGroups))
     val replaced = snap.slices.filter(s => parts.contains(s.partition))
       .groupBy(_.partition).map { case (p, ss) => p -> ss.map(_.fileId).toSeq }
     finishCommit(t, Action.ReplaceCommit,
@@ -1469,7 +1399,7 @@ class GraftTable private (
     val (routed, nGroups) = assignInsertGroups(precombine(prepare(df, t)), t,
       targetRows = effectiveTargetRows(Some(snap)))
     val prepared = routed.drop(NewGroup)
-    val stats = stageAndPublish(prepared, t, groups = Some(nGroups))
+    val stats = writeGroups(prepared, t, groups = Some(nGroups))
     val replaced = snap.slices.groupBy(_.partition)
       .map { case (p, ss) => p -> ss.map(_.fileId).toSeq }
     finishCommit(t, Action.ReplaceCommit,
@@ -1563,7 +1493,7 @@ class GraftTable private (
       val (routed, nGroups) = assignInsertGroups(precombine(prepare(repaired, t)), t,
         targetRows = effectiveTargetRows(Some(snap)))
       val prepared = routed.drop(NewGroup)
-      val stats = stageAndPublish(prepared, t, groups = Some(nGroups))
+      val stats = writeGroups(prepared, t, groups = Some(nGroups))
       finishCommit(t, Action.ReplaceCommit,
         CommitMetadata("repair_deduplicate", schemaJson(prepared), stats,
           affected, extra = Map("surplus_rows" -> surplus.toString)),
@@ -1582,7 +1512,7 @@ class GraftTable private (
     * the TableSchemaResolver.isSchemaCompatible gate :337-345). A batch
     * column strictly NARROWER than the table's (tightest common type ==
     * the table's: int→long, float→double) is cast up losslessly before
-    * staging — without this, a narrow batch stages files whose physical
+    * the write — without this, a narrow batch writes files whose physical
     * type the table schema can't read back (Spark's columnar readers
     * refuse demotion reads: PARQUET_COLUMN_DATA_TYPE_MISMATCH). A
     * strictly WIDER batch column is a valid promotion: the commit schema
@@ -1594,9 +1524,9 @@ class GraftTable private (
       .filterNot(f => Meta.all.contains(f.name))
       .map(f => f.name -> f.dataType).toMap
     if (current.isEmpty) return df
-    // strict-mode rejection runs HERE, before any staging I/O — firing
-    // it from the commit-metadata step would first pay the full staged
-    // write and publish every data file, leaving orphans for the
+    // strict-mode rejection runs HERE, before any write I/O — firing
+    // it from the commit-metadata step would first pay the full write
+    // of every data file, leaving orphans for the
     // failed-write cleaner (the reference's compatibility gate runs
     // up front too)
     if (config.strictSchema) {
@@ -1719,7 +1649,7 @@ object GraftTable {
   /** Row count + per-column [min,max,nullCount] for one data file, read
     * from its FOOTER metadata only (parquet row groups / ORC file
     * statistics; no data pages touched), dispatched on the extension the
-    * publish path wrote. `types` maps column name → the Spark type it
+    * write path wrote. `types` maps column name → the Spark type it
     * was written as; columns with unusable footer stats (missing,
     * unknown null counts, or a type this decoder doesn't cover) are
     * omitted from the result — callers treat absent stats as "cannot
@@ -1871,7 +1801,7 @@ object GraftTable {
       case DateType =>
         Some(java.time.LocalDate.ofEpochDay(v.asInstanceOf[java.lang.Integer].longValue).toString)
       case _: TimestampType | _: TimestampNTZType =>
-        // stageAndPublish forces outputTimestampType=TIMESTAMP_MICROS, so
+        // writeGroups forces outputTimestampType=TIMESTAMP_MICROS, so
         // footer stats are INT64 micros; format as a UTC-naive wall time
         // (LocalDateTime ISO form — what StatsSkipping.compare re-parses)
         v match {
@@ -1928,56 +1858,6 @@ object GraftTable {
       (ni >= 0 && ni <= integral.indexOf(IntegerType) && wide == DoubleType)
   }
 
-  /** Driver-side parallelism for publish renames. */
-  private[write] val PublishThreads = 32
-
-  /** Under the `put` commit-store profile, commits staging more than
-    * this many bytes publish via the distributed job
-    * (a `put` "move" is a byte copy — above this, those bytes must not
-    * transit the driver). */
-  private[write] val PutDriverCopyMaxBytes = 16L * 1024 * 1024
-
-  /** Test seam: invoked after EACH file lands at its published name
-    * (both publish paths). Lets a chaos spec crash a publish after K of
-    * N moves — the messiest real-world wreckage: files already at final
-    * names with no commit — and assert the failed-write reaper reclaims
-    * them. No-op in production; in `local` mode executor threads share
-    * the JVM, so the distributed path sees the injected hook too. */
-  @volatile private[graft] var onPublishedMove: String => Unit = _ => ()
-
-  /** Test seam: `Some(true)` routes every publish through the
-    * distributed job, `Some(false)` through the driver pool; `None`
-    * (production) picks from the commit's group count and byte volume.
-    * Lets a chaos spec reach partial executor-side moves on small
-    * commits, and a scale spec compare both vehicles at one size. */
-  @volatile private[graft] var publishDistributedOverride: Option[Boolean] = None
-
-  /** Executor-side publication: one Spark job moves every staged file to
-    * its published name (per the commit-store profile). Per-file
-    * accounting (bytes, footer stats) is already collected by the staged
-    * write itself, so this job is pure moves — the shape that survives
-    * 100k-file commits: renames and `put`-profile copy bytes scale out
-    * with the cluster instead of serializing on the driver publish pool
-    * (reference analog: HoodieWriteStat is populated executor-side by
-    * the write handles, io/HoodieCreateHandle.java:52-210). */
-  private[write] def publishDistributed(
-      spark: SparkSession,
-      moves: Seq[(String, String)],
-      storeName: String,
-      conf: SerializableHadoopConf): Unit = {
-    val slices = math.min(moves.size,
-      math.max(1, spark.sessionState.conf.numShufflePartitions))
-    spark.sparkContext.parallelize(moves, slices).foreachPartition { it =>
-      it.foreach { case (srcS, destS) =>
-        val src = new Path(srcS)
-        val dest = new Path(destS)
-        val dfs = dest.getFileSystem(conf.value)
-        CommitStore.forName(storeName).moveFile(dfs, src, dest)
-        onPublishedMove(destS)
-      }
-    }
-  }
-
   /** Remove a data file AND its bloom sidecar (if any) — every physical
     * data-file removal (clean, rollback, restore, aborted commit) goes
     * through here so sidecars never outlive their file. */
@@ -2004,10 +1884,7 @@ object GraftTable {
       s"heartbeatTtlMs must be 0 (default) or >= ${2L * graft.core.Heartbeat.RefreshMs} ms " +
         s"(2x the ${graft.core.Heartbeat.RefreshMs} ms heartbeat refresh cadence); " +
         s"got ${config.heartbeatTtlMs}")
-    require(Seq(null, "", "auto", "eager", "lazy", "none")
-        .contains(config.failedWritesPolicy),
-      s"unknown failedWritesPolicy '${config.failedWritesPolicy}' " +
-        "(expected 'auto', 'eager', 'lazy' or 'none')")
+    TimelineLock.parse(config.lockProvider)
     require(Seq(null, "", "parquet", "orc").contains(config.baseFormat),
       s"unknown baseFormat '${config.baseFormat}' " +
         "(expected 'parquet' or 'orc')")

@@ -20,8 +20,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Classic m-bit / k-hash bloom. Hashing is md5-derived double hashing
   * (g_i = h1 + i·h2), deterministic across JVMs and task retries like
   * every other hash in this engine. Sized from the ACTUAL key count of
-  * the file at the configured false-positive rate (reference default
-  * fpp 1e-9, HoodieIndexConfig.java:68-89).
+  * the file at a false-positive rate of [[KeyBloom.Fpp]].
   */
 final class KeyBloom(val numBits: Int, val numHashes: Int, val bits: Array[Long])
     extends Serializable {
@@ -57,8 +56,12 @@ final class KeyBloom(val numBits: Int, val numHashes: Int, val bits: Array[Long]
 
 object KeyBloom {
 
+  /** False-positive rate of every table's key blooms (the reference's
+    * default, hoodie.index.bloom.fpp, HoodieIndexConfig.java:68-89). */
+  val Fpp = 1e-9
+
   /** m = -n·ln(p)/ln(2)², k = m/n·ln(2) — standard optimal sizing. */
-  def sized(expectedKeys: Long, fpp: Double): KeyBloom = {
+  def sized(expectedKeys: Long, fpp: Double = Fpp): KeyBloom = {
     val n = math.max(1L, expectedKeys)
     val m0 = math.ceil(-n * math.log(fpp) / (math.log(2) * math.log(2)))
     val m = math.max(64L, math.min(m0.toLong, Int.MaxValue.toLong - 64)).toInt

@@ -216,7 +216,7 @@ object RowStats {
     case _                   => None
   }
 
-  /** The manifest collector for [[GraftTable.stageAndPublish]]: builds
+  /** The manifest collector for [[GraftTable.writeGroups]]: builds
     * per-column accumulators over the writer's data schema (only the
     * columns in `types`), emits (rows, bytes, colStats) per file, and
     * re-reads the footer instead whenever a corner case would make

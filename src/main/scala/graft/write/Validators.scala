@@ -5,8 +5,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Pre-commit validation: user-supplied checks that run AFTER a write's
-  * files are staged but BEFORE its instant completes; a failure aborts
-  * the commit (staged files removed, timeline untouched), so a bad batch
+  * files are written but BEFORE its instant completes; a failure aborts
+  * the commit (written files removed, timeline untouched), so a bad batch
   * can never become visible (reference analog:
   * hudi-client/hudi-spark-client/src/main/java/org/apache/hudi/client/
   * validator/SparkPreCommitValidator.java:72 + the

@@ -38,13 +38,12 @@ object ChaosSpec {
   *  - a CONCURRENT second writer under OCC (tagged batches; the shadow
   *    is folded from the timeline's own serialization order afterwards)
   *    — on leg 1 under a REAL out-of-process ZooKeeper lock
-  *  - fault injection (kill legs, which run EVERY publish through the
-  *    distributed executor-side job): a publish killed at the driver
-  *    commit point (after the conflict check, before the completing
-  *    write) AND a distributed publish killed mid-job after K of N
-  *    executor-side moves landed at published names; both recovered by
-  *    the heartbeat-driven failed-write reaper, with the published-name
-  *    orphan census asserted empty afterwards
+  *  - fault injection (kill legs): a commit killed at the driver commit
+  *    point (after the conflict check, before the completing write) AND
+  *    a write job killed mid-job after K of N files landed at their
+  *    committed names; both recovered by the heartbeat-driven
+  *    failed-write reaper, with the committed-name orphan census
+  *    asserted empty afterwards
   *
   * against a driver-side SHADOW MODEL (a plain Map folded with plain
   * Scala — no engine code), asserted equal to a full snapshot read after
@@ -72,11 +71,11 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
     }._1
   }
 
-  // the kill legs force every publish through the distributed job via a
-  // JVM-wide seam; reset it after every test, whatever the outcome
+  // the write-job kill goes through a JVM-wide writer seam; reset it
+  // after every test, whatever the outcome
   override def withFixture(test: NoArgTest): Outcome =
     try super.withFixture(test)
-    finally GraftTable.publishDistributedOverride = None
+    finally org.apache.spark.sql.graft.GroupedFileWriter.onFileLanded = _ => ()
 
   override def afterAll(): Unit = {
     spark.stop()
@@ -121,9 +120,9 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // The matrix spans both table types, both commit stores, both base
   // formats, a REAL out-of-process lock (embedded ZooKeeper, leg 1), the
-  // MOR × Put corner (leg 3), and — on the two kill legs — EVERY publish
-  // routed through the DISTRIBUTED (executor-side) job so the crash
-  // injection reaches partial executor-side moves under both stores.
+  // MOR × Put corner (leg 3), and — on the two kill legs — crash
+  // injection into the commit point and into the write job itself,
+  // under both stores.
   // Leg 3 skips the kill phase (and with it the unavoidable 60 s
   // heartbeat-TTL wait) — its job is the write/compaction/OCC surface of
   // the remaining matrix corner, not crash recovery.
@@ -133,7 +132,7 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
          (TableType.MOR, CommitStore.Put, "parquet", "inprocess", false, 60))
          .zipWithIndex)
   test(s"seeded chaos [$tt/$store/$format/$lockKey" +
-      s"${if (kills) "/distributed+kills" else ""}]: long horizon + " +
+      s"${if (kills) "/kills" else ""}]: long horizon + " +
       "concurrent OCC writer match the shadow model throughout") {
     val seed = 20260816L + legIdx
     val rng = new scala.util.Random(seed)
@@ -143,9 +142,7 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       partitionFields = Seq("p"), orderingField = "", occ = true,
       commitStore = store,
       lockProvider = if (lockKey == "zk") s"zk:${zkConnect()}" else "inprocess",
-      failedWritesPolicy = "lazy", heartbeatTtlMs = 60000,
-      targetFileRows = 200, baseFormat = format))
-    if (kills) GraftTable.publishDistributedOverride = Some(true)
+      heartbeatTtlMs = 60000, targetFileRows = 200, baseFormat = format))
     val svc = TableServices(tbl)
     val fs = tbl.timeline.fileSystem
     var shadow: Shadow = Map.empty
@@ -324,14 +321,14 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"missing=${(shadow.keySet -- cdcShadow.keySet).take(5)}")
 
     // ---- phase C: crash injection + heartbeat recovery --------------------
-    // two kill flavors, both leaving files at PUBLISHED names with no
-    // commit (the staged files were already moved):
+    // two kill flavors, both leaving files at COMMITTED names with no
+    // completed instant:
     //  C1. the driver commit point — after the OCC conflict check,
-    //      before the completing write (every move landed)
-    //  C2. the DISTRIBUTED publish mid-job — the task crashes after K of
-    //      N executor-side moves landed at final names (the messiest
-    //      real-world wreckage: half the commit's files final-named,
-    //      half still staged, a dead driver)
+    //      before the completing write (every file landed)
+    //  C2. the write job mid-job — a task crashes after K of N files
+    //      landed at their committed names (the messiest real-world
+    //      wreckage: part of the commit's files written, the rest never
+    //      started or cut mid-file, a dead driver)
     if (kills) {
       val killedInstants = scala.collection.mutable.ArrayBuffer.empty[String]
       // the crashed writer's heartbeat stops refreshing; age the file so
@@ -349,7 +346,7 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       def causeChain(t: Throwable): Boolean =
         t != null && (Option(t.getMessage).exists(_.contains("chaos-kill")) ||
           causeChain(t.getCause))
-      /** Published-name data files stamped with a killed instant,
+      /** Committed-name data files stamped with a killed instant,
         * anywhere under the table tree (the wreckage census). */
       def orphansOf(times: Seq[String]): Seq[String] = {
         def walk(d: org.apache.hadoop.fs.Path): Seq[String] = {
@@ -374,26 +371,26 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(killed1, "the injected driver kill must fire")
       ageKilledHeartbeat()
 
-      // C2: distributed-publish kill after 3 landed moves (>= 5 file
-      // groups staged across the 5 partitions, so 3 < N)
-      val moved = new java.util.concurrent.atomic.AtomicInteger(0)
-      GraftTable.onPublishedMove = _ =>
-        if (moved.incrementAndGet() == 3)
-          throw new RuntimeException("chaos-kill-dist")
+      // C2: write-job kill after 3 files landed (>= 5 file groups
+      // written across the 5 partitions, so 3 < N)
+      val landed = new java.util.concurrent.atomic.AtomicInteger(0)
+      org.apache.spark.sql.graft.GroupedFileWriter.onFileLanded = _ =>
+        if (landed.incrementAndGet() == 3)
+          throw new RuntimeException("chaos-kill-write")
       val rows2 = drawIds(rng, 25).map(i => Doc(i, "k2", 9002L, partOf(i)))
       val killed2 = try { tbl.upsert(df(rows2)); false }
         catch { case scala.util.control.NonFatal(e) =>
-          assert(causeChain(e), s"unexpected publish failure: $e"); true }
-      GraftTable.onPublishedMove = _ => ()
-      assert(killed2 && moved.get >= 3,
-        s"the distributed kill must fire after >=3 moves (landed ${moved.get})")
+          assert(causeChain(e), s"unexpected write failure: $e"); true }
+      org.apache.spark.sql.graft.GroupedFileWriter.onFileLanded = _ => ()
+      assert(killed2 && landed.get >= 3,
+        s"the write-job kill must fire after >=3 files (landed ${landed.get})")
       ageKilledHeartbeat()
       assert(orphansOf(Seq(killedInstants.last)).nonEmpty,
-        "the distributed kill must leave partial files at PUBLISHED names")
+        "the write-job kill must leave partial files at COMMITTED names")
 
       val killWall = System.currentTimeMillis()
       assert(tbl.timeline.instants().exists(i => !i.isCompleted),
-        "killed publishes must leave pending instants")
+        "killed writes must leave pending instants")
       // killed effects were never applied to the shadow; the table must
       // agree even while the pending wreckage is still on the timeline
       assertState(tbl, shadow, "after kills (wreckage pending)")
@@ -421,12 +418,12 @@ class ChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (waitMs > 0) Thread.sleep(waitMs)
       doUpsert()
       assert(tbl.timeline.instants().forall(_.isCompleted),
-        "the heartbeat reaper must recover both killed publishes")
+        "the heartbeat reaper must recover both killed writes")
       assert(tbl.timeline.completed().count(i => i.action == Action.Rollback &&
           tbl.timeline.metadataOf(i).extra.get("reason").contains("failed_write")) >= 2,
         "recovery must be audited as failed-write rollbacks")
       assert(orphansOf(killedInstants.toSeq).isEmpty,
-        "the reaper must reclaim every published-name orphan of both kills: " +
+        "the reaper must reclaim every committed-name orphan of both kills: " +
           orphansOf(killedInstants.toSeq).take(5).toString)
       assertState(tbl, shadow, "after crash recovery")
     }

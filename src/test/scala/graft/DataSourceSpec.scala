@@ -168,7 +168,6 @@ class DataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("occ", "true")
       .option("commit.store", "put")
       .option("lock.provider", "inprocess")
-      .option("failed.writes.policy", "lazy")
       .option("heartbeat.ttl.ms", "90000")
       .mode(SaveMode.Append)
       .save()
@@ -176,7 +175,6 @@ class DataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cfg.occ)
     assert(cfg.commitStore == "put")
     assert(cfg.lockProvider == "inprocess")
-    assert(cfg.failedWritesPolicy == "lazy")
     assert(cfg.heartbeatTtlMs == 90000L)
     // the options only apply at creation; later writes just use them
     Seq((2L, "b", 2L)).toDF("id", "v", "ts")

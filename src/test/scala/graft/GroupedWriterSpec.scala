@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Focused tests for the round-12 staged-write internals: the direct
-  * per-group writer (org.apache.spark.sql.graft.GroupedFileWriter —
-  * replaced DataFrameWriter.partitionBy on the publish path) and the
-  * fork-free local filesystem (graft.core.NioLocalFileSystem). Both
-  * must be drop-in: same staged directory layout, same escaping, same
+/** Focused tests for the write-path internals: the direct per-group
+  * writer (org.apache.spark.sql.graft.GroupedFileWriter — replaced
+  * DataFrameWriter.partitionBy on the write path) and the fork-free
+  * local filesystem (graft.core.NioLocalFileSystem). Both must be
+  * drop-in: each group's file at exactly the name it is given, same
   * on-disk permissions, same data. */
 class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -27,13 +27,24 @@ class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def tmp(): String = Files.createTempDirectory("graft-gw").toString
 
-  /** Parquet-stages `df` grouped by `gp`/`gf` the way the publish path
-    * does, returning the manifest of (path, (rows, bytes, stats)). */
+  /** The layout `DataFrameWriter.partitionBy("gp", "gf")` produces, as
+    * the writer's relative-path function: one `part-00000` file per
+    * group directory, named the way partitionBy escapes its values. */
+  private def partitionByLayout(ext: String): Seq[String] => String = { g =>
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    def seg(c: String, v: String): String =
+      if (v == null || v.isEmpty) s"$c=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
+      else s"$c=${ExternalCatalogUtils.escapePathName(v)}"
+    s"${seg("gp", g(0))}/${seg("gf", g(1))}/part-00000.$ext"
+  }
+
+  /** Parquet-writes `df` grouped by `gp`/`gf` in partitionBy's layout,
+    * returning the manifest of (group values, (rows, bytes, stats)). */
   private def stage(df: org.apache.spark.sql.DataFrame, dest: String) = {
     val types = df.schema.fields.filterNot(f => f.name == "gp" || f.name == "gf")
       .map(f => f.name -> f.dataType).toMap
     org.apache.spark.sql.graft.GroupedFileWriter.write(
-      spark, df, Seq("gp", "gf"), dest, "parquet",
+      spark, df, Seq("gp", "gf"), dest, "parquet", partitionByLayout("parquet"),
       (dataSchema: org.apache.spark.sql.types.StructType) =>
         new graft.write.RowStats.Collector(types, false, dataSchema))
   }
@@ -58,6 +69,10 @@ class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     val viaDirect = tmp()
     val manifest = stage(df, viaDirect)
     assert(manifest.map(_._2._1).sum == 500L, "the manifest counts every row")
+    // the manifest names each group by its values, never by a path
+    assert(manifest.map(_._1).toSet ==
+      (1 to 500).map(i => Seq(parts(i % parts.size), s"g${i % 7}")).toSet)
+    assert(manifest.size == manifest.map(_._1).distinct.size, "one file per group")
 
     val fs = new Path(viaDirect).getFileSystem(
       spark.sessionState.newHadoopConf())
@@ -67,13 +82,12 @@ class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"${p.getParent.getName}/${p.getName}"
       }.toSet
     assert(groupDirs(viaDirect) == groupDirs(viaSpark),
-      "staged group-directory layout must match partitionBy exactly")
-    // exactly one part file per group dir (the publish glob contract)
+      "each group must land at exactly the name it was given")
+    // exactly the one named file per group dir
     fs.globStatus(new Path(viaDirect, "gp=*/gf=*")).foreach { d =>
-      val parts = fs.listStatus(d.getPath)
-        .filter(_.getPath.getName.startsWith("part-"))
-      assert(parts.length == 1, s"expected 1 part file in ${d.getPath}")
-      assert(!fs.listStatus(d.getPath).exists(_.getPath.getName.startsWith(".tmp-")),
+      val names = fs.listStatus(d.getPath).map(_.getPath.getName).toSeq
+      assert(names == Seq("part-00000.parquet"), s"files in ${d.getPath}: $names")
+      assert(!new java.io.File(d.getPath.toUri.getPath).list().exists(_.contains(".tmp-")),
         "no temp file may survive a successful write")
     }
     // identical rows, group columns re-derived from the directory names
@@ -90,10 +104,7 @@ class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dest = tmp()
     val df = Seq.empty[(Long, String, String)].toDF("id", "gp", "gf")
     assert(stage(df, dest).isEmpty)
-    val fs = new Path(dest).getFileSystem(spark.sessionState.newHadoopConf())
-    val found = Option(fs.globStatus(new Path(dest, "gp=*/gf=*/part-*")))
-      .map(_.toSeq).getOrElse(Nil)
-    assert(found.isEmpty)
+    assert(new java.io.File(dest).list().isEmpty, "no directory or file is written")
   }
 
   test("NioLocalFileSystem sets the same permissions as the shell path, without forking") {
@@ -136,7 +147,7 @@ class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = r.dataOnly(r.snapshot())
     assert(out.count() == 240)
     assert(out.filter(col("v").startsWith("u")).count() == 60)
-    // compaction folds the staged deltas — proves the delta suffix routing
+    // compaction folds the written deltas — proves the delta suffix routing
     graft.services.TableServices(tbl).compact()
     val out2 = r.dataOnly(r.snapshot())
     assert(out2.filter(col("v").startsWith("u")).count() == 60)
@@ -200,14 +211,16 @@ class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       schema.fields.filterNot(f => f.name == "gp" || f.name == "gf")
         .map(f => f.name -> f.dataType).toMap
     val dest = tmp()
+    val layout = partitionByLayout(format)
     val manifest = org.apache.spark.sql.graft.GroupedFileWriter.write(
-      spark, df, Seq("gp", "gf"), dest, format,
+      spark, df, Seq("gp", "gf"), dest, format, layout,
       (dataSchema: StructType) =>
         new graft.write.RowStats.Collector(types, format == "orc", dataSchema))
     assert(manifest.nonEmpty)
     val conf = spark.sessionState.newHadoopConf()
-    manifest.foreach { case (pathStr, (rowsGot, bytesGot, statsGot)) =>
-      val p = new Path(pathStr)
+    manifest.foreach { case (group, (rowsGot, bytesGot, statsGot)) =>
+      val p = new Path(new Path(dest), layout(group))
+      val pathStr = p.toString
       val fs = p.getFileSystem(conf)
       val (rowsExp, statsExp) = graft.write.GraftTable.footerStats(p, conf, types)
       assert(rowsGot == rowsExp, s"rows for $pathStr")

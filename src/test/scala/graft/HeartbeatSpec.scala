@@ -13,8 +13,8 @@ import graft.read.GraftReader
 import graft.services.TableServices
 import graft.write.GraftTable
 
-/** Failed-write cleanup: writer heartbeats + the eager/lazy/none rollback
-  * policies (reference analogs: HoodieHeartbeatClient.java:50,226,
+/** Failed-write cleanup: writer heartbeats + the eager (no occ) and lazy
+  * (occ) rollback policies (reference analogs: HoodieHeartbeatClient.java:50,226,
   * hoodie.cleaner.policy.failed.writes HoodieCompactionConfig.java:214,
   * rollbackFailedWrites AbstractHoodieWriteClient.java:916-976). */
 class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -30,11 +30,11 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmp(): String = Files.createTempDirectory("graft-hb").toString
 
-  def cfg(policy: String = "auto", occ: Boolean = false,
-      ttlMs: Long = 0L): TableConfig = TableConfig(
+  /** Cleanup is eager without `occ` and lazy (heartbeat-gated) with it. */
+  def cfg(occ: Boolean = false, ttlMs: Long = 0L): TableConfig = TableConfig(
     name = "t", tableType = TableType.COW, keyFields = Seq("id"),
     orderingField = "ts", targetFileRows = 1000, occ = occ,
-    failedWritesPolicy = policy, heartbeatTtlMs = ttlMs)
+    heartbeatTtlMs = ttlMs)
 
   def rows(ids: Long*): DataFrame = {
     import spark.implicits._
@@ -54,12 +54,13 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.close()
   }
 
-  /** Plant a crashed write: pending inflight marker (dated `time`),
-    * staged tmp leftovers, one orphan data file at a final name, and a
-    * promote temp from a crashed put-profile move
-    * (ConditionalPutCommitStore.moveFile's attempt-unique copy target).
-    * Returns (staged, orphan) paths; the promote temp sits next to the
-    * orphan as `.dead-0_<time>.parquet.put1t1`. */
+  /** Plant a crashed write: pending inflight marker (dated `time`), one
+    * orphan data file at its committed name, and the writer temp of a
+    * file the crash cut mid-write (`.dead-1_<time>.parquet.tmp-7`,
+    * GroupedFileWriter.write). Also the leftovers of a crash under an
+    * older build: a `.graft/.tmp/<time>` staging tree and a put-profile
+    * promote temp (`.dead-0_<time>.parquet.put1t1`). Returns (staged,
+    * orphan) paths; the temps are [[crashTemps]]. */
   private def plantCrash(tbl: GraftTable, time: String): (Path, Path) = {
     val metaDir = tbl.timeline.metaDir
     touchFile(tbl, new Path(metaDir, s"$time.commit.inflight"), "{}")
@@ -67,41 +68,100 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
     touchFile(tbl, staged, "staged")
     val orphan = new Path(tbl.basePath, s"dead-0_$time.parquet")
     touchFile(tbl, orphan, "orphan")
-    touchFile(tbl, promoteTemp(tbl, time), "half-copied")
+    crashTemps(tbl, time).foreach(touchFile(tbl, _, "half-written"))
     (staged, orphan)
   }
 
-  private def promoteTemp(tbl: GraftTable, time: String): Path =
-    new Path(tbl.basePath, s".dead-0_$time.parquet.put1t1")
+  private def crashTemps(tbl: GraftTable, time: String): Seq[Path] = Seq(
+    new Path(tbl.basePath, s".dead-1_$time.parquet.tmp-7"),
+    new Path(tbl.basePath, s".dead-0_$time.parquet.put1t1"))
 
   test("eager policy rolls back a crashed write at the next write start") {
-    val tbl = GraftTable.create(spark, tmp(), cfg()) // auto -> eager (no OCC)
+    val tbl = GraftTable.create(spark, tmp(), cfg()) // no OCC -> eager
     tbl.bulkInsert(rows(1, 2, 3))
     val (staged, orphan) = plantCrash(tbl, "19990101000000000")
     tbl.upsert(rows(4))
     val fs = tbl.timeline.fileSystem
     assert(tbl.timeline.instants().forall(_.isCompleted))
     assert(!fs.exists(staged) && !fs.exists(orphan))
-    assert(!fs.exists(promoteTemp(tbl, "19990101000000000")),
-      "a crashed promote's attempt temp must be reaped with its instant")
+    assert(!crashTemps(tbl, "19990101000000000").exists(fs.exists),
+      "a crashed write's temps must be reaped with its instant")
     assert(tbl.timeline.completed().exists(i =>
       i.action == Action.Rollback &&
         tbl.timeline.metadataOf(i).extra.get("target").contains("19990101000000000")))
     assert(state(tbl) == Seq(1L, 2L, 3L, 4L))
   }
 
-  test("none policy leaves the crashed write untouched") {
-    val tbl = GraftTable.create(spark, tmp(), cfg(policy = "none"))
-    tbl.bulkInsert(rows(1))
-    val (staged, orphan) = plantCrash(tbl, "19990101000000000")
-    tbl.upsert(rows(2))
+  test("rolling back a pending write deletes the files it left at committed names") {
+    val tbl = GraftTable.create(spark, tmp(), cfg().copy(partitionFields = Seq("v")))
+    tbl.bulkInsert(rows(1, 2, 3))
     val fs = tbl.timeline.fileSystem
-    assert(tbl.timeline.instants().exists(i => !i.isCompleted))
-    assert(fs.exists(staged) && fs.exists(orphan))
+    val crashT = "19990101000000000"
+    val (staged, _) = plantCrash(tbl, crashT)
+    // a crash mid-write leaves files in REAL partition dirs
+    val partDir = fs.listStatus(new Path(tbl.basePath)).filter(_.isDirectory).map(_.getPath)
+      .filterNot(_.getName == Timeline.MetaDir).head
+    val inPart = Seq(new Path(partDir, s"deadbeef-0_$crashT.parquet"),
+      new Path(partDir, s".deadbeef-1_$crashT.parquet.tmp-3"))
+    inPart.foreach(touchFile(tbl, _, "orphan"))
+    Heartbeat.touch(tbl.timeline, crashT)
+    TableServices(tbl).rollback(crashT)
+    def leftovers(d: Path): Seq[String] = fs.listStatus(d).toSeq.flatMap { st =>
+      if (st.isDirectory) { if (st.getPath.getName == Timeline.MetaDir) Nil else leftovers(st.getPath) }
+      else Seq(st.getPath.getName).filter(_.contains(s"_$crashT."))
+    }
+    assert(leftovers(new Path(tbl.basePath)).isEmpty && !inPart.exists(fs.exists),
+      s"files of the rolled-back write survive: ${leftovers(new Path(tbl.basePath))}")
+    assert(!crashTemps(tbl, crashT).exists(fs.exists) && !fs.exists(staged))
+    assert(!fs.exists(Heartbeat.path(tbl.timeline, crashT)), "its heartbeat goes too")
+    assert(tbl.timeline.instants().forall(_.isCompleted))
+    assert(state(tbl) == Seq(1L, 2L, 3L))
+  }
+
+  /** Rewrite table.json with `fields` (raw JSON members) prepended, as a
+    * table written by an older build carries them (through the
+    * filesystem, so its checksum stays valid). */
+  private def injectConfig(tbl: GraftTable, fields: String): Unit = {
+    val fs = tbl.timeline.fileSystem
+    val conf = new Path(tbl.timeline.metaDir, Timeline.ConfigFile)
+    val json = { val in = fs.open(conf); try new String(in.readAllBytes(), "UTF-8") finally in.close() }
+    assert(json.startsWith("{"))
+    val out = fs.create(conf, true)
+    try out.write(("{" + fields + "," + json.drop(1)).getBytes("UTF-8")) finally out.close()
+  }
+
+  test("a table.json that still carries failedWritesPolicy and bloomFpp loads, and cleanup follows occ") {
+    // "none" once switched cleanup off; a stored value is now ignored:
+    // eager without occ, lazy (heartbeat-gated) with it
+    Seq(false, true).foreach { occ =>
+      val dir = tmp()
+      val created = GraftTable.create(spark, dir,
+        cfg(occ = occ, ttlMs = 60000).copy(bloomIndex = true))
+      created.bulkInsert(rows(1, 2))
+      injectConfig(created, "\"failedWritesPolicy\":\"none\",\"bloomFpp\":0.5")
+      val tbl = GraftTable.load(spark, dir)
+      assert(tbl.config.occ == occ && tbl.config.bloomIndex)
+      val crashT = "19990101000000000"
+      val (staged, orphan) = plantCrash(tbl, crashT)
+      val fs = tbl.timeline.fileSystem
+      if (occ) {
+        Heartbeat.touch(tbl.timeline, crashT) // a live writer's heartbeat
+        tbl.upsert(rows(3))
+        assert(fs.exists(orphan) && tbl.timeline.instants().exists(_.time == crashT),
+          "lazy cleanup must spare a fresh heartbeat")
+        val old = System.currentTimeMillis() - 600000L
+        fs.setTimes(Heartbeat.path(tbl.timeline, crashT), old, old)
+      }
+      tbl.upsert(rows(4))
+      assert(!fs.exists(staged) && !fs.exists(orphan),
+        s"occ=$occ: the crashed write must be reaped despite the stored 'none'")
+      assert(tbl.timeline.instants().forall(_.isCompleted))
+      assert(state(tbl) == (if (occ) Seq(1L, 2L, 3L, 4L) else Seq(1L, 2L, 4L)))
+    }
   }
 
   test("lazy policy spares a live writer's fresh heartbeat, reaps an expired one") {
-    val tbl = GraftTable.create(spark, tmp(), cfg(policy = "lazy", ttlMs = 60000))
+    val tbl = GraftTable.create(spark, tmp(), cfg(occ = true, ttlMs = 60000))
     tbl.bulkInsert(rows(1))
     val crashT = "19990101000000000"
     plantCrash(tbl, crashT)
@@ -121,7 +181,7 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("lazy policy spares a just-minted instant with no heartbeat yet") {
-    val tbl = GraftTable.create(spark, tmp(), cfg(policy = "lazy", ttlMs = 60000))
+    val tbl = GraftTable.create(spark, tmp(), cfg(occ = true, ttlMs = 60000))
     tbl.bulkInsert(rows(1))
     // a peer writer mid-mint: instant file exists, heartbeat not yet —
     // the instant's own wall-clock age is inside the ttl, so it's spared
@@ -194,7 +254,7 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a published commit with a stale inflight marker is never treated as failed") {
-    val tbl = GraftTable.create(spark, tmp(), cfg()) // auto -> eager
+    val tbl = GraftTable.create(spark, tmp(), cfg()) // no occ -> eager
     tbl.bulkInsert(rows(1, 2, 3))
     val fs = tbl.timeline.fileSystem
     // simulate a crash INSIDE Timeline.complete on an OLD instant:
@@ -223,7 +283,7 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("an exception-aborted write stops refreshing its heartbeat and is reapable") {
     import spark.implicits._
-    val tbl = GraftTable.create(spark, tmp(), cfg(policy = "lazy", ttlMs = 60000))
+    val tbl = GraftTable.create(spark, tmp(), cfg(occ = true, ttlMs = 60000))
     tbl.bulkInsert(rows(1))
     // a batch without the key column fails the write AFTER the instant
     // was minted; the guard must stop the heartbeat refresher so the
@@ -255,8 +315,7 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("failed-write cleanup reaps .orc orphans on an ORC table") {
-    val tbl = GraftTable.create(spark, tmp(), cfg(policy = "eager")
-      .copy(baseFormat = "orc"))
+    val tbl = GraftTable.create(spark, tmp(), cfg().copy(baseFormat = "orc"))
     tbl.bulkInsert(rows(1L, 2L))
     val crashT = "19990101000000000"
     val metaDir = tbl.timeline.metaDir
@@ -276,16 +335,16 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // a lazy-policy cleaner hammering rollbackFailedWrites WHILE a live
-  // writer mints/stages/publishes commit after commit (reference
+  // writer mints/writes/completes commit after commit (reference
   // contract: the LAZY policy + heartbeats exist precisely so cleanup is
   // safe next to in-flight writers, AbstractHoodieWriteClient.java:963).
   // The cleaner must reap ONLY the planted crashed write, never a live
-  // one — under both storage profiles (rename moves vs put copies)
+  // one — under both storage profiles
   Seq(CommitStore.Rename, CommitStore.Put).foreach { store =>
     test(s"lazy cleaner racing a live writer reaps only the crashed instant ($store)") {
       val dir = tmp()
       val tbl = GraftTable.create(spark, dir,
-        cfg(policy = "lazy", occ = true, ttlMs = 60000).copy(commitStore = store))
+        cfg(occ = true, ttlMs = 60000).copy(commitStore = store))
       tbl.bulkInsert(rows(1L, 2L, 3L, 4L, 5L))
       val crashT = "19990101000000000"
       val (staged, orphan) = plantCrash(tbl, crashT)

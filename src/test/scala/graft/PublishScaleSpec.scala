@@ -1,7 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,17 +15,16 @@ import graft.core._
 import graft.read.GraftReader
 import graft.write.GraftTable
 
-/** Publish-tail scale probe (the guardrail for distributed publication
-  * — reference contract: per-file accounting is executor-side there,
-  * HoodieWriteStat populated by write handles,
-  * io/HoodieCreateHandle.java:52-210).
+/** Write-tail scale probe: a commit's write must do the same WORK per
+  * file group at any group count — one Spark write job whatever the
+  * group count, each group's file written once at its committed name, no
+  * staging tree and no second (publish) phase (reference contract: the
+  * write handles write each base file in place and the completed instant
+  * is the only publish point, io/HoodieCreateHandle.java:52-210).
   *
-  * A commit's publish cost (move + footer-stats per staged file) must
-  * grow ~linearly in the number of file groups: a super-linear driver
-  * bottleneck at thousands of groups is exactly the failure mode the
-  * distributed publish job exists to prevent. Tiny one-row groups keep
-  * the probe cheap — publish cost is per-FILE, so near-empty files
-  * exercise it at full fidelity. */
+  * Asserted as counts, not wall-clock bounds (timings go to `info`).
+  * Tiny one-row groups keep the probe cheap — the cost under test is
+  * per-FILE, so near-empty files exercise it at full fidelity. */
 class PublishScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = Tables.configure(SparkSession.builder()
@@ -50,135 +54,85 @@ class PublishScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       targetFileRows = 1000, statsColumns = Seq("v"), commitStore = store,
       baseFormat = format)
 
-  /** Runs `body` with the publish vehicle forced: `Some(true)` the
-    * distributed job, `Some(false)` the driver pool, `None` the
-    * group-count and byte-volume rule. */
-  private def publishing[T](distributed: Option[Boolean])(body: => T): T = {
-    GraftTable.publishDistributedOverride = distributed
-    try body finally GraftTable.publishDistributedOverride = None
+  /** Descriptions of every Spark job started while `body` runs. A marker
+    * job run afterwards flushes the asynchronous listener bus: once the
+    * listener has seen it, it has seen every earlier job too. */
+  private def jobDescriptions(body: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val marker = s"pubscale-marker-${System.nanoTime()}"
+    try {
+      body
+      sc.setJobDescription(marker)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 60000
+      while (!seen.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(marker), "listener bus did not drain")
+      seen.asScala.toSeq.filterNot(_ == marker)
+    } finally sc.removeSparkListener(listener)
   }
 
-  /** Wall time of one bulk_insert producing exactly `groups` file groups,
-    * published as `distributed` says (see [[publishing]]). */
-  private def timeCommit(groups: Int, store: String,
-      format: String = "parquet", distributed: Option[Boolean] = None): Double = {
+  /** Data files under the table (everything outside `.graft`). */
+  private def dataFiles(tbl: GraftTable): Seq[String] = {
+    val fs = tbl.timeline.fileSystem
+    val it = fs.listFiles(new Path(tbl.basePath), true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toUri.getPath)
+      .filterNot(_.contains(s"/${Timeline.MetaDir}/")).toSeq
+  }
+
+  /** One bulk_insert producing exactly `groups` file groups: asserts it
+    * leaves one file per group at its committed name and no staging
+    * tree, and returns the descriptions of the Spark jobs it ran. */
+  private def commitJobs(groups: Int, store: String, format: String = "parquet"): Seq[String] = {
     val tbl = GraftTable.create(spark, tmp(), cfg(store, format))
     val t0 = System.nanoTime()
-    publishing(distributed)(tbl.bulkInsert(df(groups)))
-    val sec = (System.nanoTime() - t0) / 1e9
-    val snap = Snapshot.resolve(tbl.timeline)
-    assert(snap.slices.size == groups,
-      s"probe expects one group per row: ${snap.slices.size} vs $groups")
-    sec
+    val jobs = jobDescriptions(tbl.bulkInsert(df(groups)))
+    info(f"$store/$format: $groups groups in ${(System.nanoTime() - t0) / 1e9}%.2fs")
+    val files = Snapshot.resolve(tbl.timeline).slices.flatMap(_.allFiles)
+    assert(files.size == groups, s"probe expects one group per row: ${files.size} vs $groups")
+    val onDisk = dataFiles(tbl)
+    assert(onDisk.size == groups, s"one file per group: ${onDisk.size} files for $groups groups")
+    assert(onDisk.toSet == files.map(st => new Path(tbl.absPath(st)).toUri.getPath).toSet,
+      "every file on disk is one the commit lists, at its committed name")
+    val fs = tbl.timeline.fileSystem
+    assert(!fs.exists(new Path(tbl.timeline.metaDir, ".tmp")), "no staging tree")
+    jobs
   }
 
-  test("publish cost stays ~linear per group into the thousands (both profiles)") {
-    timeCommit(64, CommitStore.Rename) // warm codegen + writer classes
-    Seq(CommitStore.Rename, CommitStore.Put).foreach { store =>
-      val small = 500
-      val big = 4000
-      // 8x the groups may cost at most ~4x per group (a generous linearity
-      // bound: a driver-serialized tail would blow far past it, while
-      // scheduler noise on near-empty files stays well inside). Wall-clock
-      // on a shared box is noisy, so one clean RE-measure is allowed
-      // before declaring a regression — a real super-linear tail fails
-      // both attempts; a GC pause or noisy neighbor fails at most one.
-      var lastMsg = ""
-      val ok = (1 to 2).exists { _ =>
-        val perSmall = timeCommit(small, store) / small
-        val perBig = timeCommit(big, store) / big
-        lastMsg = f"$store: per-group publish cost grew super-linearly: " +
-          f"$perSmall%.5fs/group at $small vs $perBig%.5fs/group at $big"
-        perBig < perSmall * 4.0
-      }
-      assert(ok, lastMsg)
-    }
+  /** 64 and 2,000 groups run the same Spark jobs, none of them a publish. */
+  private def assertFlatJobs(store: String, format: String): Unit = {
+    commitJobs(8, store, format) // warm codegen + writer classes
+    val small = commitJobs(64, store, format)
+    val big = commitJobs(2000, store, format)
+    assert(small.exists(_.startsWith("graft: stage")), s"the write job is described: $small")
+    assert(!(small ++ big).exists(_.startsWith("graft: publish")),
+      s"no publish job: ${(small ++ big).distinct}")
+    assert(small.size == big.size,
+      s"$store/$format: 64 groups ran ${small.size} jobs, 2000 ran ${big.size}:\n" +
+        s"${small.sorted}\n${big.sorted}")
   }
 
-  test("ORC publish cost stays ~linear per group into the thousands") {
-    // same guardrail as the parquet probe, through the ORC footer-stats
-    // decoder (GraftTable.orcStats) — a super-linear tail here would mean
-    // the ORC stats read or the format-dispatched publish serializes
-    timeCommit(64, CommitStore.Rename, format = "orc") // warm ORC writer
-    val small = 500
-    val big = 2000
-    var lastMsg = ""
-    val ok = (1 to 2).exists { _ =>
-      val perSmall = timeCommit(small, CommitStore.Rename, "orc") / small
-      val perBig = timeCommit(big, CommitStore.Rename, "orc") / big
-      lastMsg = f"orc: per-group publish cost grew super-linearly: " +
-        f"$perSmall%.5fs/group at $small vs $perBig%.5fs/group at $big"
-      perBig < perSmall * 4.0
-    }
-    assert(ok, lastMsg)
-    // and the ORC footer stats actually made it into the metadata
+  test("a 64-group and a 2,000-group commit run the same Spark jobs and leave one file per group (both profiles)") {
+    Seq(CommitStore.Rename, CommitStore.Put).foreach(assertFlatJobs(_, "parquet"))
+  }
+
+  test("ORC: a 64-group and a 2,000-group commit run the same Spark jobs and leave one file per group") {
+    assertFlatJobs(CommitStore.Rename, "orc")
+    // and the ORC column stats actually made it into the metadata
     val tbl = GraftTable.create(spark, tmp(), cfg(CommitStore.Rename, "orc"))
     tbl.bulkInsert(df(8))
     val stats = Snapshot.resolve(tbl.timeline).slices.flatMap(_.baseFile)
     assert(stats.forall(st => st.rows == 1L && st.columnStats.contains("v")))
   }
 
-  test("10k near-empty groups publish with flat per-group cost under `distributed`") {
-    // one order beyond the linearity probe: a pathological small-file
-    // commit (10,000 one-row groups). Per-group cost under the
-    // distributed job must hold ~flat vs the 2k point — the driver is
-    // out of the data path entirely, so group count scales with executor
-    // count, not driver throughput.
-    val per2k = timeCommit(2000, CommitStore.Rename,
-      distributed = Some(true)) / 2000
-    val per10k = timeCommit(10000, CommitStore.Rename,
-      distributed = Some(true)) / 10000
-    info(f"distributed per-group: $per2k%.5fs at 2k, $per10k%.5fs at 10k")
-    assert(per10k < per2k * 2.5,
-      f"per-group cost must stay ~flat under distributed publication: " +
-        f"$per2k%.5fs/group at 2k vs $per10k%.5fs/group at 10k")
-
-    // measured driver/distributed crossover, validating the auto
-    // thresholds (32 files / 16 MB): driver wins only while the commit
-    // fits its publish pool; distributed wins from the low hundreds
-    val points = Seq(32, 256)
-    points.foreach { n =>
-      val drv = timeCommit(n, CommitStore.Rename, distributed = Some(false))
-      val dst = timeCommit(n, CommitStore.Rename, distributed = Some(true))
-      info(f"crossover probe n=$n%-4d driver=$drv%.2fs distributed=$dst%.2fs")
-    }
-  }
-
-  test("auto mode distributes large commits and keeps small ones on the driver") {
-    val tbl = GraftTable.create(spark, tmp(), cfg(CommitStore.Rename))
-    tbl.bulkInsert(df(5)) // 5 groups <= pool width -> driver path
-    val r = GraftReader(tbl)
-    assert(r.dataOnly(r.snapshot()).count() == 5)
-
-    // forced-distributed tiny commit: same bytes, same stats
-    val tbl2 = GraftTable.create(spark, tmp(), cfg(CommitStore.Rename))
-    publishing(Some(true))(tbl2.bulkInsert(df(5)))
-    val r2 = GraftReader(tbl2)
-    assert(r2.dataOnly(r2.snapshot()).count() == 5)
-    val s1 = Snapshot.resolve(tbl.timeline).slices.flatMap(_.baseFile)
-      .map(st => (st.fileId.length > 0, st.rows, st.columnStats.keySet)).sortBy(_._2)
-    val s2 = Snapshot.resolve(tbl2.timeline).slices.flatMap(_.baseFile)
-      .map(st => (st.fileId.length > 0, st.rows, st.columnStats.keySet)).sortBy(_._2)
-    assert(s1 == s2, "driver and distributed publication must record identical stats shapes")
-  }
-
-  test("put profile under auto distributes once the byte volume matters") {
-    // ~200 one-row groups stay under the byte threshold but over the
-    // pool width -> distributed by group count; assert written state is
-    // byte-exact regardless of the publication vehicle
-    val tbl = GraftTable.create(spark, tmp(), cfg(CommitStore.Put))
-    tbl.bulkInsert(df(200))
-    val r = GraftReader(tbl)
-    import spark.implicits._
-    val got = r.dataOnly(r.snapshot()).select("id").as[Long].collect().sorted
-    assert(got.toSeq == (1L to 200L))
-    // footer-derived stats made it into the commit metadata
-    val stats = Snapshot.resolve(tbl.timeline).slices.flatMap(_.baseFile)
-    assert(stats.forall(_.rows == 1L))
-    assert(stats.forall(_.columnStats.contains("v")))
-  }
-
-  test("a table.json that still carries publishMode loads, and its publish follows the group/byte rule") {
+  test("a table.json that still carries publishMode loads and commits") {
     import spark.implicits._
     val dir = tmp()
     GraftTable.create(spark, dir, cfg(CommitStore.Rename))
@@ -186,7 +140,7 @@ class PublishScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // still names a publish vehicle (written through the filesystem so
     // its checksum stays valid)
     val tl = new Timeline(dir, spark.sessionState.newHadoopConf())
-    val conf = new org.apache.hadoop.fs.Path(tl.metaDir, Timeline.ConfigFile)
+    val conf = new Path(tl.metaDir, Timeline.ConfigFile)
     val fs = tl.fileSystem
     val json = { val in = fs.open(conf); try new String(in.readAllBytes(), "UTF-8") finally in.close() }
     assert(json.startsWith("{") && !json.contains("publishMode"))
@@ -195,25 +149,11 @@ class PublishScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally out.close()
     assert(tl.config.name == "pubscale")
     val tbl = GraftTable.load(spark, dir)
-    // the thread each file lands on names the vehicle: executor task
-    // threads for the distributed job, the driver pool otherwise
-    def publishThreads(commit: => Unit): Seq[String] = {
-      val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      GraftTable.onPublishedMove = _ => { names.add(Thread.currentThread().getName); () }
-      try commit finally GraftTable.onPublishedMove = _ => ()
-      names.toArray(Array.empty[String]).toSeq
-    }
-    def onExecutor(t: String): Boolean = t.startsWith("Executor task launch worker")
-    // 64 groups > the 32-thread driver pool: distributed, despite "driver"
-    val wide = publishThreads(tbl.bulkInsert(df(64)))
-    assert(wide.size == 64 && wide.forall(onExecutor),
-      s"a 64-group commit must publish on executors: ${wide.distinct.take(3)}")
-    // 5 groups fit the pool: the driver keeps them
-    val narrow = publishThreads(tbl.bulkInsert(
-      (101 to 105).map(i => (i.toLong, s"p$i", s"v$i", i.toLong)).toDF("id", "p", "v", "ts")))
-    assert(narrow.size == 5 && !narrow.exists(onExecutor),
-      s"a 5-group commit must publish on the driver pool: ${narrow.distinct.take(3)}")
+    tbl.bulkInsert(df(64))
+    tbl.bulkInsert(
+      (101 to 105).map(i => (i.toLong, s"p$i", s"v$i", i.toLong)).toDF("id", "p", "v", "ts"))
     val r = GraftReader(tbl)
     assert(r.dataOnly(r.snapshot()).count() == 69)
+    assert(dataFiles(tbl).size == 69, "one file per group")
   }
 }

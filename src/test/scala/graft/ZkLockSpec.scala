@@ -172,6 +172,45 @@ class ZkLockSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!tl.fileSystem.exists(lockFile), "no silent file-lock fallback")
   }
 
+  test("create refuses a lockProvider no provider parses") {
+    val cfg = TableConfig(name = "ztcpc", tableType = TableType.COW,
+      keyFields = Seq("id"), orderingField = "ts", occ = true,
+      lockProvider = "tcp:127.0.0.1:1")
+    val dir = tmp()
+    val e = intercept[IllegalArgumentException] { GraftTable.create(spark, dir, cfg) }
+    assert(e.getMessage.contains("unknown lockProvider 'tcp:127.0.0.1:1'"))
+    intercept[IllegalArgumentException] {
+      GraftTable.create(spark, dir, cfg.copy(lockProvider = "zk:  "))
+    }
+    assert(!new Timeline(dir, spark.sessionState.newHadoopConf()).exists,
+      "no table may be created")
+  }
+
+  test("a write on a stored 'tcp:' lockProvider fails before it mints an instant or writes a file") {
+    import spark.implicits._
+    val tbl = GraftTable.create(spark, tmp(), TableConfig(name = "ztcpw",
+      tableType = TableType.COW, keyFields = Seq("id"), orderingField = "ts",
+      occ = true))
+    tbl.bulkInsert(Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("id", "v", "ts"))
+    // a table.json written before the TCP provider was dropped
+    tbl.timeline.updateConfig(tbl.config.copy(lockProvider = "tcp:127.0.0.1:1"))
+    val fs = tbl.timeline.fileSystem
+    def files(): Set[String] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(tbl.basePath), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString)
+        .filterNot(_.contains(s"/${Timeline.MetaDir}/")).toSet
+    }
+    val before = files()
+    val instants = tbl.timeline.instants()
+    val e = intercept[IllegalArgumentException] {
+      tbl.upsert(Seq((1L, "a2", 2L)).toDF("id", "v", "ts"))
+    }
+    assert(e.getMessage.contains("unknown lockProvider"))
+    assert(files() == before, s"new files: ${files() -- before}")
+    assert(tbl.timeline.instants() == instants, "no instant may be minted")
+    assert(tbl.timeline.instants().forall(_.isCompleted))
+  }
+
   test("sequential commits share ONE long-lived zk session (no per-commit connect)") {
     import spark.implicits._
     val tbl = GraftTable.create(spark, tmp(), TableConfig(
