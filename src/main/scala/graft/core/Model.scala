@@ -64,6 +64,30 @@ case class WriteStat(
   * (reference analog: index/zorder/ZOrderingIndexHelper.java:233). */
 case class ColStat(min: String, max: String, nullCount: Long)
 
+/** The one order of string bounds (column stats, key ranges): Unicode
+  * code-point order, which is the unsigned UTF-8 byte order the writer
+  * (RowStats) and Spark's own string compare use. `String.compareTo`
+  * orders UTF-16 code units instead and disagrees once one string holds
+  * a character in U+E000–U+FFFF and the other a supplementary one
+  * ("Ａ" sorts above "😀" there, below it here). Allocates nothing. */
+object CodePointOrder extends Ordering[String] {
+  override def compare(a: String, b: String): Int = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n) {
+      val x = a.charAt(i)
+      val y = b.charAt(i)
+      if (x != y)
+        // surrogates (U+D800–U+DFFF) encode code points above U+FFFF:
+        // lift them above U+E000–U+FFFF before comparing
+        return if (x >= 0xD800 && y >= 0xD800) lift(x) - lift(y) else x - y
+      i += 1
+    }
+    a.length - b.length
+  }
+  private def lift(c: Char): Int = if (c >= 0xE000) c - 0x800 else c + 0x2000
+}
+
 /** Completed-instant payload (reference analog:
   * model/HoodieCommitMetadata.java:47). */
 case class CommitMetadata(
@@ -185,8 +209,9 @@ case class TableConfig(
       * pushdown/pruning/vectorization hold for either (reference analog:
       * hoodie.table.base.file.format, HoodieFileFormat.java:29-43 +
       * io/storage/HoodieOrcWriter.java; HFILE is out of scope — HBase
-      * client). File-level column stats come from the matching footer
-      * reader (parquet row groups / ORC file statistics). Timeline,
+      * client). File-level column stats are accumulated from the rows
+      * as the writing task streams them (graft.write.RowStats), the
+      * same for either format. Timeline,
       * checkpoint and bloom-sidecar INTERNAL files stay parquet — the
       * format choice governs data files only. Old table.json → null =
       * parquet. */

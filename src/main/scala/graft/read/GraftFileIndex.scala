@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 
-import graft.core.{ColStat, WriteStat}
+import graft.core.{CodePointOrder, ColStat, WriteStat}
 import graft.write.Meta
 
 /** The one custom Spark-API class the read path needs (reference analog:
@@ -267,8 +267,12 @@ object StatsSkipping {
     case StartsWith(a, Literal(p, StringType)) if p != null =>
       statOf(a, st) match {
         case Some(cs) if cs.min != null =>
+          // strings starting with `pre` form the code-point interval
+          // [pre, ...): it meets [min, max] iff max >= pre and min is
+          // at or below pre or already starts with it
           val pre = p.toString
-          cs.max >= pre && cs.min.take(pre.length) <= pre
+          CodePointOrder.compare(cs.max, pre) >= 0 &&
+            (CodePointOrder.compare(cs.min, pre) <= 0 || cs.min.startsWith(pre))
         case _ => true
       }
 
@@ -425,7 +429,7 @@ object StatsSkipping {
         }
         Some(BigDecimal(statStr).compare(l))
       case StringType =>
-        Some(statStr.compareTo(lit.toString))
+        Some(CodePointOrder.compare(statStr, lit.toString))
       case _: TimestampType | _: TimestampNTZType =>
         Some(java.lang.Long.compare(micros(statStr), lit.asInstanceOf[Long]))
       case DateType =>

@@ -147,15 +147,11 @@ class GraftReader(table: GraftTable) {
     val touched = Snapshot.commitsInRange(timeline, begin, endT)
       .flatMap(_._2.stats).map(s => (s.partition, s.fileId)).toSet
     val slices = snap.slices.filter(s => touched.contains((s.partition, s.fileId)))
-    // latest version per key over the touched groups, tombstones KEPT:
-    // mergeLatest drops tombstoned keys entirely, so run the same window
-    // without the tombstone filter and keep the winner row even if deleted
-    val all = table.readStatsDf(schema, slices.flatMap(_.allFiles))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(Key), col(Partition))
-      .orderBy(col(CommitTime).desc, col(Seqno).desc)
-    val latest = all
-      .withColumn("_g_rn", row_number().over(w)).filter(col("_g_rn") === 1).drop("_g_rn")
+    // latest version per key over the touched groups through the table's
+    // merge strategy, as the snapshot merges it, but keeping a key's
+    // winning tombstone (mergeLatest drops tombstoned keys entirely)
+    val latest = table.mergeLatestKeepTombstones(
+        table.readStatsDf(schema, slices.flatMap(_.allFiles)))
       .filter(col(CommitTime) > begin && col(CommitTime) <= endT)
     // keys that already existed before the range start -> U, else I
     val prior =
@@ -209,7 +205,8 @@ class GraftReader(table: GraftTable) {
         }
       }
     def mayContain(st: WriteStat): Boolean =
-      (st.minKey.isEmpty || ks.exists(k => k >= st.minKey && k <= st.maxKey)) &&
+      (st.minKey.isEmpty || ks.exists(k => CodePointOrder.compare(k, st.minKey) >= 0 &&
+        CodePointOrder.compare(k, st.maxKey) <= 0)) &&
         bloomMay(st)
     val slices = snap.slices.filter(s =>
       s.baseFile.exists(mayContain) || s.deltas.exists(mayContain))

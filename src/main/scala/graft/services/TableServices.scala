@@ -100,8 +100,11 @@ class TableServices(table: GraftTable) {
   /** Wait (bounded) for earlier-minted pending data instants to resolve. */
   private def awaitEarlierData(time: String, timeoutMs: Long = 10000L): Boolean = {
     val deadline = System.currentTimeMillis() + timeoutMs
-    while (earlierPendingData(time) && System.currentTimeMillis() < deadline)
+    while (earlierPendingData(time) && System.currentTimeMillis() < deadline) {
+      val p = TableServices.awaitSleepProbe
+      if (p ne null) p.incrementAndGet()
       Thread.sleep(25)
+    }
     !earlierPendingData(time)
   }
 
@@ -1158,4 +1161,10 @@ class TableServices(table: GraftTable) {
 
 object TableServices {
   def apply(table: GraftTable): TableServices = new TableServices(table)
+
+  /** Test probe (null in production — the null check is free): counts
+    * the sleeps of `awaitEarlierData`, so a spec can assert that a
+    * service never waited behind a pending instant instead of bounding
+    * its wall clock. */
+  @volatile private[graft] var awaitSleepProbe: java.util.concurrent.atomic.AtomicLong = null
 }

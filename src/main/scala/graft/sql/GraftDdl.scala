@@ -212,14 +212,6 @@ object GraftDdl {
 
   /** TRUNCATE TABLE: one replacecommit replacing every live file group
     * (files removed later by clean — same logical-delete contract as
-    * delete_partition). */
-  def truncate(table: GraftTable): String = {
-    val snap = Snapshot.resolve(table.timeline)
-    val replaced = snap.slices.groupBy(_.partition)
-      .map { case (p, ss) => p -> ss.map(_.fileId).toSeq }
-    val t = table.timeline.start(Action.ReplaceCommit)
-    table.timeline.complete(t, Action.ReplaceCommit,
-      CommitMetadata("truncate", "", Nil, replaced))
-    t
-  }
+    * delete_partition, and the same write protocol). */
+  def truncate(table: GraftTable): String = table.replaceFileGroups("truncate", _ => true)
 }

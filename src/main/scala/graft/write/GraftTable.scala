@@ -1,6 +1,5 @@
 package graft.write
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -341,27 +340,24 @@ class GraftTable private (
       .sortWithinPartitions(col(GP), col(GF), col(Key))
       .drop(dropped: _*)
     // timestamps must be stored as INT64 micros: Spark's default (INT96)
-    // writes NO usable parquet footer min/max, which would silently drop
-    // timestamp columns from data skipping. Parquet's prepareWrite reads
-    // this key ONLY from the session conf (a per-write option is
-    // overwritten), so it is pinned for the session — idempotently and
+    // writes NO usable parquet footer min/max, which would silently stop
+    // the scan's row-group filter pushdown from skipping on timestamp
+    // columns. Parquet's prepareWrite reads this key ONLY from the
+    // session conf (a per-write option is overwritten), so it is pinned
+    // for the session — idempotently and
     // WITHOUT restore, because a set/restore window races the concurrent
     // writers this engine supports (async compactor + ingest on one
     // session): interleaved restores can leave INT96 active mid-write,
-    // silently dropping stats. Same-value sets cannot race.
+    // silently dropping footer stats. Same-value sets cannot race.
     val tsTypeKey = "spark.sql.parquet.outputTimestampType"
     if (!spark.conf.getOption(tsTypeKey).contains("TIMESTAMP_MICROS"))
       spark.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
 
-    // Per-file stats are accumulated from the ROWS as the writing task
-    // streams them into each file (graft.write.RowStats) — the write's
-    // manifest then needs NO re-open of the just-written file (a footer
-    // re-read measured ~6-9 ms/file, 6× the parquet write itself at
-    // small files; see OPTIMIZATION_r13.md). Encodings mirror the footer
-    // decoders exactly (corner cases fall back to the footer read per
-    // file), so StatsSkipping.compare and SHOW COLUMN STATS see
-    // byte-identical values. Reference analog: HoodieWriteStat
-    // accounting, populated by the write handles during the write.
+    // Per-file stats (and, on a bloomIndex table, the key bloom sidecar)
+    // are built from the ROWS as the writing task streams them into each
+    // file (graft.write.RowStats) — no re-open of the just-written file
+    // and no second job over it. Reference analog: HoodieWriteStat and
+    // the bloom, populated by the write handles during the write.
     val statsCols = config.statsColumns.filter(data.columns.contains)
     val statTypes: Map[String, DataType] =
       (Key +: statsCols).flatMap(c =>
@@ -385,13 +381,14 @@ class GraftTable private (
       if (g(0).isEmpty) name else s"${g(0)}/$name"
     }
     val isOrc = ext == "orc"
+    val bloom = config.bloomIndex
     // the write job returns the MANIFEST: (group values, (rows, bytes,
     // column stats)) per file — the driver does zero per-file I/O
     val manifest: Seq[(Seq[String], (Long, Long, Map[String, ColStat]))] =
       withJobDesc(s"stage $commitTime")(
         org.apache.spark.sql.graft.GroupedFileWriter.write(
           spark, toWrite, groupCols, basePath, ext, relPath,
-          (dataSchema: StructType) => new RowStats.Collector(statTypes, isOrc, dataSchema)))
+          (dataSchema: StructType) => new RowStats.Collector(statTypes, isOrc, bloom, dataSchema)))
 
     // a group split across tasks would write one committed name twice,
     // the later file silently replacing the earlier one's rows
@@ -430,43 +427,7 @@ class GraftTable private (
         maxKey = keyStat.flatMap(s => Option(s.max)).getOrElse(""),
         columnStats = colStats.filter { case (c, _) => c != Key } ++ partStats)
     }
-    if (config.bloomIndex && out.nonEmpty) buildBlooms(out)
     out
-  }
-
-  /** Build one key bloom per just-written file and write it as a
-    * `<file>.bloom` sidecar — a distributed job reading ONLY the key
-    * column of the commit's own output (columnar single-column scan; the
-    * reference streams keys into the filter inside its write handle, an
-    * option Spark's writer doesn't expose — one narrow extra pass over
-    * freshly written, page-cache-warm files buys the same index). Blooms
-    * are sized from each file's ACTUAL row count (already known from its
-    * parquet footer) at [[KeyBloom.Fpp]]. Grouping by file is a
-    * keys-only shuffle, so correctness never depends on Spark's input
-    * split planning (a row-group-split file would otherwise build a
-    * partial filter). */
-  private def buildBlooms(stats: Seq[WriteStat]): Unit = {
-    import spark.implicits._
-    val native = stats.filterNot(_.external)
-    if (native.isEmpty) return
-    val rowsByName: Map[String, Long] =
-      native.map(st => new Path(st.path).getName -> st.rows).toMap
-    val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val keyOnly = StructType(Seq(
-      org.apache.spark.sql.types.StructField(Key, org.apache.spark.sql.types.StringType)))
-    readStatsDf(keyOnly, native)
-      .select(input_file_name().as("_g_bf"), col(Key))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .mapGroups { (file, it) =>
-        val uri = new java.net.URI(file)
-        val dataPath = new Path(uri)
-        val bloom = KeyBloom.sized(rowsByName.getOrElse(dataPath.getName, 1L))
-        it.foreach(kv => bloom.add(kv._2))
-        KeyBloom.write(org.apache.hadoop.fs.FileSystem.get(uri, conf.value), dataPath, bloom)
-        file
-      }
-      .collect()
   }
 
   // =========================================================================
@@ -882,7 +843,8 @@ class GraftTable private (
       if (global) keys.crossJoin(broadcast(candDf))
       else keys.join(broadcast(candDf), col(Partition) === col("_g_bf_part"))
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val kept = pairs.select(col("_g_bf_path"), col(Key)).as[(String, String)]
+    val kept = withJobDesc("bloom probe")(pairs.select(col("_g_bf_path"), col(Key))
+      .as[(String, String)]
       .mapPartitions { it =>
         val cache = scala.collection.mutable.Map.empty[String, Option[KeyBloom]]
         val hits = scala.collection.mutable.Set.empty[String]
@@ -901,7 +863,7 @@ class GraftTable private (
         }
         hits.iterator
       }
-      .collect().toSet
+      .collect()).toSet
     val keptNative = native.filter(st => kept.contains(absPath(st)))
     lastBloomProbe = Some((stats.size, keptNative.size + external.size))
     keptNative ++ external
@@ -928,7 +890,8 @@ class GraftTable private (
       if (global) {
         val mins = batchStats.flatMap(_._2)
         val maxs = batchStats.flatMap(_._3)
-        val g = if (mins.isEmpty) None else Some((mins.min, maxs.max))
+        val g = if (mins.isEmpty) None
+          else Some((mins.min(CodePointOrder), maxs.max(CodePointOrder)))
         _ => g
       } else {
         val m = batchStats.flatMap { case (p, mn, mx, _) =>
@@ -1413,14 +1376,21 @@ class GraftTable private (
     * removed later by clean (reference analog:
     * SparkDeletePartitionCommitActionExecutor.java:42). */
   def deletePartitions(partitions: Seq[String]): String = {
+    val ps = partitions.toSet
+    replaceFileGroups("delete_partition", s => ps.contains(s.partition))
+  }
+
+  /** One replacecommit replacing the live file groups `selected` picks,
+    * through the whole write protocol (lock-form check, failed-write
+    * rollback, heartbeat, OCC guard, validators, inline services). */
+  private[graft] def replaceFileGroups(operation: String, selected: FileSlice => Boolean): String = {
     val t = startWrite(Action.ReplaceCommit)
     heartbeatGuard(t) {
     val snap = Snapshot.resolve(timeline)
-    val ps = partitions.toSet
-    val replaced = snap.slices.filter(s => ps.contains(s.partition))
+    val replaced = snap.slices.filter(selected)
       .groupBy(_.partition).map { case (p, ss) => p -> ss.map(_.fileId).toSeq }
     finishCommit(t, Action.ReplaceCommit,
-      CommitMetadata("delete_partition", "", Nil, replaced),
+      CommitMetadata(operation, "", Nil, replaced),
       snap.asOf, guarded = true)
     t
     }
@@ -1646,175 +1616,8 @@ object DataTypeJson {
 object GraftTable {
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftTable])
 
-  /** Row count + per-column [min,max,nullCount] for one data file, read
-    * from its FOOTER metadata only (parquet row groups / ORC file
-    * statistics; no data pages touched), dispatched on the extension the
-    * write path wrote. `types` maps column name → the Spark type it
-    * was written as; columns with unusable footer stats (missing,
-    * unknown null counts, or a type this decoder doesn't cover) are
-    * omitted from the result — callers treat absent stats as "cannot
-    * skip", which is always sound. */
-  private[graft] def footerStats(
-      file: Path,
-      conf: Configuration,
-      types: Map[String, DataType]): (Long, Map[String, ColStat]) =
-    if (file.getName.endsWith(".orc")) orcStats(file, conf, types)
-    else parquetFooterStats(file, conf, types)
-
-  private def parquetFooterStats(
-      file: Path,
-      conf: Configuration,
-      types: Map[String, DataType]): (Long, Map[String, ColStat]) = {
-    import scala.jdk.CollectionConverters._
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val stats = types.flatMap { case (name, dt) =>
-        val chunks = blocks.flatMap(_.getColumns.asScala)
-          .filter(c => c.getPath.size == 1 && c.getPath.toDotString == name)
-        val sts = chunks.map(_.getStatistics)
-        if (chunks.isEmpty || sts.exists(s => s == null || s.isEmpty || s.getNumNulls < 0)) None
-        else {
-          val nulls = sts.map(_.getNumNulls).sum
-          val withVals = sts.filter(_.hasNonNullValue)
-          if (withVals.isEmpty) Some(name -> ColStat(null, null, nulls))
-          else {
-            // merge across row groups with the TYPED comparator, then
-            // re-encode in the string formats StatsSkipping.compare parses
-            val merged = withVals.head
-            withVals.tail.foreach(merged.mergeStatistics)
-            (decodeStat(dt, merged.genericGetMin), decodeStat(dt, merged.genericGetMax)) match {
-              case (Some(lo), Some(hi)) => Some(name -> ColStat(lo, hi, nulls))
-              case _                    => None
-            }
-          }
-        }
-      }
-      (rows, stats)
-    } finally reader.close()
-  }
-
-  /** ORC twin of [[parquetFooterStats]]: file-level column statistics
-    * from the ORC reader (orc-core ships with Spark; reference analog:
-    * io/storage/HoodieOrcWriter.java writes the same stats its readers
-    * consume). Top-level columns only, like the parquet path. Null
-    * count = rows − numberOfValues (exact for top-level columns).
-    * Timestamps: Spark stores TimestampNTZ in ORC as physical int64
-    * MICROS (the probe schema is `bigint`), so its stats ride the
-    * integer path with the same micros encoding the parquet
-    * TIMESTAMP_MICROS branch uses; TimestampType (instant) maps to ORC's
-    * tz-normalized `timestamp` whose UTC accessors
-    * (getMinimumUTC/getMaximumUTC) give the true instant — both are
-    * re-encoded as the UTC-naive LocalDateTime form StatsSkipping
-    * re-parses, value-for-value equal to the parquet decoder (pinned by
-    * the cross-format parity test). */
-  private def orcStats(
-      file: Path,
-      conf: Configuration,
-      types: Map[String, DataType]): (Long, Map[String, ColStat]) = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.orc.{ColumnStatistics => OrcStat, _}
-    import org.apache.spark.sql.types._
-    val reader = OrcFile.createReader(file, OrcFile.readerOptions(conf))
-    try {
-      val rows = reader.getNumberOfRows
-      val schema = reader.getSchema
-      val all = reader.getStatistics
-      val byName: Map[String, OrcStat] =
-        schema.getFieldNames.asScala.zip(schema.getChildren.asScala)
-          .collect { case (n, t) if t.getId < all.length => n -> all(t.getId) }
-          .toMap
-      val stats = types.flatMap { case (name, dt) =>
-        byName.get(name).flatMap { s =>
-          val nulls = rows - s.getNumberOfValues
-          if (s.getNumberOfValues == 0L) Some(name -> ColStat(null, null, nulls))
-          else {
-            val bounds: Option[(String, String)] = (dt, s) match {
-              case (StringType, ss: StringColumnStatistics)
-                  if ss.getMinimum != null && ss.getMaximum != null =>
-                Some((ss.getMinimum, ss.getMaximum))
-              case (ByteType | ShortType | IntegerType | LongType,
-                  is: IntegerColumnStatistics) =>
-                Some((is.getMinimum.toString, is.getMaximum.toString))
-              case (FloatType | DoubleType, ds: DoubleColumnStatistics) =>
-                // a float's bound widens to the exact same double, so the
-                // re-parsed interval is unchanged
-                Some((ds.getMinimum.toString, ds.getMaximum.toString))
-              case (BooleanType, bs: BooleanColumnStatistics) =>
-                Some((if (bs.getFalseCount > 0) "false" else "true",
-                  if (bs.getTrueCount > 0) "true" else "false"))
-              case (d: DecimalType, ds: DecimalColumnStatistics)
-                  if ds.getMinimum != null && ds.getMaximum != null =>
-                Some((ds.getMinimum.bigDecimalValue.setScale(d.scale).toPlainString,
-                  ds.getMaximum.bigDecimalValue.setScale(d.scale).toPlainString))
-              case (DateType, ds: DateColumnStatistics)
-                  if ds.getMinimumLocalDate != null && ds.getMaximumLocalDate != null =>
-                // decode via epoch day, NOT getMinimumLocalDate.toString:
-                // ORC's LocalDate accessors return hybrid-calendar
-                // ChronoLocalDates ("Hybrid AD 2020-01-02"), while
-                // ColStat carries the same ISO form the parquet path
-                // derives from the stored epoch day
-                Some((
-                  java.time.LocalDate.ofEpochDay(ds.getMinimumDayOfEpoch).toString,
-                  java.time.LocalDate.ofEpochDay(ds.getMaximumDayOfEpoch).toString))
-              case (_: TimestampNTZType, is: IntegerColumnStatistics) =>
-                // NTZ is physically int64 micros in ORC — same encoding
-                // as the parquet TIMESTAMP_MICROS footer branch
-                Some((GraftTable.microsToWallIso(is.getMinimum),
-                  GraftTable.microsToWallIso(is.getMaximum)))
-              case (_: TimestampType, ts: TimestampColumnStatistics)
-                  if ts.getMinimumUTC != null && ts.getMaximumUTC != null =>
-                def enc(t: java.sql.Timestamp): String =
-                  GraftTable.microsToWallIso(
-                    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L)
-                Some((enc(ts.getMinimumUTC), enc(ts.getMaximumUTC)))
-              case _ => None
-            }
-            bounds.map { case (lo, hi) => name -> ColStat(lo, hi, nulls) }
-          }
-        }
-      }
-      (rows, stats)
-    } finally reader.close()
-  }
-
-  /** Parquet footer stat value → the string encoding ColStat carries
-    * (same ordering semantics as the former `cast("string")` aggregate:
-    * numerics re-parse via BigDecimal, temporals via LocalDate[Time]). */
-  private def decodeStat(dt: DataType, v: Any): Option[String] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case StringType => Some(v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
-      case ByteType | ShortType | IntegerType | LongType |
-           FloatType | DoubleType | BooleanType => Some(v.toString)
-      case d: DecimalType => v match {
-        case b: org.apache.parquet.io.api.Binary =>
-          Some(new java.math.BigDecimal(new java.math.BigInteger(b.getBytes), d.scale).toPlainString)
-        case i: java.lang.Integer =>
-          Some(java.math.BigDecimal.valueOf(i.longValue, d.scale).toPlainString)
-        case l: java.lang.Long =>
-          Some(java.math.BigDecimal.valueOf(l, d.scale).toPlainString)
-        case _ => None
-      }
-      case DateType =>
-        Some(java.time.LocalDate.ofEpochDay(v.asInstanceOf[java.lang.Integer].longValue).toString)
-      case _: TimestampType | _: TimestampNTZType =>
-        // writeGroups forces outputTimestampType=TIMESTAMP_MICROS, so
-        // footer stats are INT64 micros; format as a UTC-naive wall time
-        // (LocalDateTime ISO form — what StatsSkipping.compare re-parses)
-        v match {
-          case l: java.lang.Long => Some(microsToWallIso(l.longValue))
-          case _ => None // INT96 (legacy writer): no usable stats
-        }
-      case _ => None
-    }
-  }
-
   /** Epoch micros → the UTC-naive LocalDateTime ISO form ColStat carries
-    * for timestamps (what StatsSkipping.compare re-parses) — the ONE
-    * encoder both footer-stats decoders share. */
+    * for timestamps (what StatsSkipping.compare re-parses). */
   private[write] def microsToWallIso(micros: Long): String =
     java.time.LocalDateTime.ofEpochSecond(
       Math.floorDiv(micros, 1000000L),
@@ -1831,7 +1634,8 @@ object GraftTable {
       keyRangeOf(st.partition) match {
         case Some((lo, hi)) =>
           st.minKey.isEmpty || st.maxKey.isEmpty ||
-            (st.minKey <= hi && st.maxKey >= lo)
+            (CodePointOrder.compare(st.minKey, hi) <= 0 &&
+              CodePointOrder.compare(st.maxKey, lo) >= 0)
         case None => true
       }
     }

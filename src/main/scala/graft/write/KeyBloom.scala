@@ -19,14 +19,27 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Classic m-bit / k-hash bloom. Hashing is md5-derived double hashing
   * (g_i = h1 + i·h2), deterministic across JVMs and task retries like
-  * every other hash in this engine. Sized from the ACTUAL key count of
+  * every other hash in this engine. Sized from the ACTUAL row count of
   * the file at a false-positive rate of [[KeyBloom.Fpp]].
+  *
+  * Built in the task that writes the file, like the reference's write
+  * handle does: [[RowStats.Collector]] hashes each row's key as the row
+  * streams into the file and, once the file has landed at its committed
+  * name, sizes the filter, sets the bits and writes the sidecar (a
+  * retried task overwrites both). The transient cost is the two hashes,
+  * 16 B per row of the file being written, per writing task, on
+  * `bloomIndex` tables only.
   */
 final class KeyBloom(val numBits: Int, val numHashes: Int, val bits: Array[Long])
     extends Serializable {
 
   def add(key: String): Unit = {
     val (h1, h2) = KeyBloom.hash(key)
+    addHash(h1, h2)
+  }
+
+  /** Set the bits of a key whose [[KeyBloom.hash]] is (h1, h2). */
+  private[write] def addHash(h1: Long, h2: Long): Unit = {
     var i = 0
     while (i < numHashes) {
       val b = KeyBloom.index(h1, h2, i, numBits)
@@ -79,11 +92,16 @@ object KeyBloom {
     new KeyBloom(m, k, longs)
   }
 
+  /** (h1, h2): the two big-endian halves of the MD5 of the key's UTF-8
+    * bytes. */
   private[write] def hash(key: String): (Long, Long) = {
-    val d = MessageDigest.getInstance("MD5").digest(key.getBytes(StandardCharsets.UTF_8))
-    val buf = ByteBuffer.wrap(d)
+    val buf = digest(MessageDigest.getInstance("MD5"), key.getBytes(StandardCharsets.UTF_8))
     (buf.getLong, buf.getLong)
   }
+
+  /** MD5 of a key's UTF-8 bytes, positioned to read h1 then h2. */
+  private[write] def digest(md: MessageDigest, utf8: Array[Byte]): ByteBuffer =
+    ByteBuffer.wrap(md.digest(utf8))
 
   private[write] def index(h1: Long, h2: Long, i: Int, numBits: Int): Int = {
     val combined = h1 + i * h2

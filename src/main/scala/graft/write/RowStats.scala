@@ -8,54 +8,53 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.ColStat
 
-/** Per-file (rows, bytes, column stats) accumulated from the rows AS THE
-  * STAGED WRITE STREAMS THEM — replacing a per-file footer re-open that
-  * measured ~6-9 ms/file (6× the parquet write itself at tiny file
-  * sizes; see OPTIMIZATION_r13.md). The reference populates
-  * HoodieWriteStat the same way, from the write handle's own row stream
-  * (io/HoodieCreateHandle.java:52-210).
+/** Per-file metadata of a data file — rows, bytes, column stats and, on
+  * a `bloomIndex` table, the key bloom sidecar — built from the rows AS
+  * THE WRITING TASK STREAMS THEM into the file. Nothing re-opens the
+  * just-written file and no second job reads it back. The reference
+  * populates HoodieWriteStat, the key range and the bloom the same way,
+  * inside its write handle (io/HoodieCreateHandle.java:52-210,
+  * avro/HoodieAvroWriteSupport.java).
   *
-  * CONTRACT: output must be byte-identical to what
-  * [[GraftTable.footerStats]] decodes from the file the writer just
-  * produced — ColStat strings feed StatsSkipping.compare and surface
-  * verbatim in SHOW COLUMN STATS (q135). The per-type encodings below
-  * mirror the two footer decoders exactly (pinned by the parity fuzz in
-  * GroupedWriterSpec):
-  *  - string: value itself (parquet stats compare unsigned
-  *    byte-lexicographic = UTF8String.compareTo)
-  *  - integral: decimal digits (Long.toString == the footer's boxed
-  *    Integer/Long toString)
-  *  - float/double: java.lang.Float/Double.toString of the value —
-  *    EXCEPT under ORC, whose footer holds doubles for float columns
-  *    (a float's exact double widening, so Double.toString of the
-  *    widened value)
+  * This object DEFINES graft's column stats. ColStat strings feed
+  * StatsSkipping.compare and surface verbatim in SHOW COLUMN STATS
+  * (q135), and they are stored in every commit's JSON and checkpoint.
+  * Per type, the bounds are the column's min and max, encoded as:
+  *  - string: the value itself, ordered by UTF-8 bytes
+  *    (UTF8String.compareTo, = code-point order, [[graft.core.CodePointOrder]])
+  *  - integral: decimal digits
+  *  - float/double: java.lang.Float/Double.toString of the value; on an
+  *    ORC table a float prints as its exact double widening
+  *    (Double.toString), the form ORC tables' commits have always held
   *  - boolean: "false"/"true" (false < true)
   *  - date: LocalDate ISO of the epoch day
   *  - timestamp/ntz: micros → [[GraftTable.microsToWallIso]]
   *  - decimal: BigDecimal at declared scale, toPlainString
-  *  - any other type: untracked (both footer decoders drop it)
-  *  - all-null column: ColStat(null, null, nullCount) (both decoders)
+  *  - all-null column: ColStat(null, null, nullCount)
+  *  - binary: null count only when all-null, else no entry; nested types:
+  *    no entry
   *
-  * Corner cases where the two FORMATS' footers genuinely diverge from
-  * simple accumulation (oversized string bounds — parquet drops stats at
-  * min+max ≥ 4096 B, ORC nulls them past its own truncation threshold;
-  * float/double NaN and mixed-sign zero, where parquet's total-order
-  * comparator and ORC's primitive compares disagree) FALL BACK to the
-  * footer read for that file, so the output is identical by construction
-  * and only pathological files pay the re-open. */
+  * A missing entry means "cannot skip", so dropping one is always sound.
+  * Two cases drop it:
+  *  - a string column whose min or max exceeds [[MaxStringBoundBytes]]
+  *    (bounds ride in every commit's metadata);
+  *  - a float/double column holding a NaN: Spark orders NaN above every
+  *    value, so bounds that left it out would wrongly skip `d > x`.
+  * -0.0 needs no rule: StatsSkipping parses bounds as BigDecimal, where
+  * -0.0 equals 0.0. */
 object RowStats {
 
-  private val StringFallbackBytes = 1000 // < min(parquet 4096-pair, ORC 1024)/2
+  /** Longest string bound, in UTF-8 bytes, a file's stats record. */
+  private[graft] val MaxStringBoundBytes = 1024
 
   private sealed trait Acc extends Serializable {
     var nulls: Long = 0L
     var seen: Boolean = false
-    var fallback: Boolean = false
     def reset0(): Unit
-    final def reset(): Unit = { nulls = 0L; seen = false; fallback = false; reset0() }
+    final def reset(): Unit = { nulls = 0L; seen = false; reset0() }
     def update(row: InternalRow, ord: Int): Unit
-    /** None = column untracked; Some((null, null)) impossible — all-null
-      * is handled by the caller via `seen`. */
+    /** None = no entry for a valued column; all-null is handled by the
+      * caller via `seen`. */
     def bounds(): Option[(String, String)]
   }
 
@@ -65,12 +64,13 @@ object RowStats {
     override def reset0(): Unit = { mn = null; mx = null }
     override def update(row: InternalRow, ord: Int): Unit = {
       val v = row.getUTF8String(ord)
-      if (v.numBytes > StringFallbackBytes) fallback = true
       if (!seen) { seen = true; mn = v.copy(); mx = mn }
       else if (v.compareTo(mn) < 0) mn = v.copy()
       else if (v.compareTo(mx) > 0) mx = v.copy()
     }
-    override def bounds(): Option[(String, String)] = Some((mn.toString, mx.toString))
+    override def bounds(): Option[(String, String)] =
+      if (mn.numBytes > MaxStringBoundBytes || mx.numBytes > MaxStringBoundBytes) None
+      else Some((mn.toString, mx.toString))
   }
 
   private class LongAcc extends Acc {
@@ -99,37 +99,35 @@ object RowStats {
     override def reset0(): Unit = { mn = 0.0; mx = 0.0 }
     override def update(row: InternalRow, ord: Int): Unit = {
       val v = row.getDouble(ord)
-      if (java.lang.Double.isNaN(v) ||
-        java.lang.Double.doubleToRawLongBits(v) == NegZeroD) fallback = true
       if (!seen) { seen = true; mn = v; mx = v }
       else {
         if (java.lang.Double.compare(v, mn) < 0) mn = v
         if (java.lang.Double.compare(v, mx) > 0) mx = v
       }
     }
+    // Double.compare orders NaN above every value: a NaN max means the
+    // column holds one
     override def bounds(): Option[(String, String)] =
-      Some((java.lang.Double.toString(mn), java.lang.Double.toString(mx)))
+      if (mx.isNaN) None
+      else Some((java.lang.Double.toString(mn), java.lang.Double.toString(mx)))
   }
-  private val NegZeroD = java.lang.Double.doubleToRawLongBits(-0.0)
-  private val NegZeroF = java.lang.Float.floatToRawIntBits(-0.0f)
 
   private final class FloatAcc(orc: Boolean) extends Acc {
     private var mn = 0.0f; private var mx = 0.0f
     override def reset0(): Unit = { mn = 0.0f; mx = 0.0f }
     override def update(row: InternalRow, ord: Int): Unit = {
       val v = row.getFloat(ord)
-      if (java.lang.Float.isNaN(v) ||
-        java.lang.Float.floatToRawIntBits(v) == NegZeroF) fallback = true
       if (!seen) { seen = true; mn = v; mx = v }
       else {
         if (java.lang.Float.compare(v, mn) < 0) mn = v
         if (java.lang.Float.compare(v, mx) > 0) mx = v
       }
     }
-    // ORC holds doubles for float columns; parquet holds floats — the
-    // widening is value-exact, only the printed form differs
+    // a NaN max means the column holds one (see DoubleAcc); ORC tables
+    // print a float bound as its value-exact double widening
     override def bounds(): Option[(String, String)] =
-      if (orc) Some((java.lang.Double.toString(mn.toDouble),
+      if (mx.isNaN) None
+      else if (orc) Some((java.lang.Double.toString(mn.toDouble),
         java.lang.Double.toString(mx.toDouble)))
       else Some((java.lang.Float.toString(mn), java.lang.Float.toString(mx)))
   }
@@ -186,19 +184,15 @@ object RowStats {
       mn.setScale(scale).toPlainString, mx.setScale(scale).toPlainString))
   }
 
-  /** Primitive type whose bounds neither footer decoder encodes (binary):
-    * nulls still counted, so an all-null file yields the same
-    * ColStat(null, null, n) both decoders produce, and a valued file
-    * yields nothing — exactly like the footer paths. */
+  /** Binary: no order worth recording, but nulls are still counted, so
+    * an all-null file gets ColStat(null, null, n) like any column. */
   private final class NoneAcc extends Acc {
     override def reset0(): Unit = ()
     override def update(row: InternalRow, ord: Int): Unit = { seen = true }
     override def bounds(): Option[(String, String)] = None
   }
 
-  /** None = the column can never have a footer-stats entry at all (nested
-    * paths: the parquet decoder only reads path-size-1 chunks, so even an
-    * all-null struct/array/map column stays absent). */
+  /** None = the column never gets an entry (nested types). */
   private def accFor(dt: DataType, orc: Boolean): Option[Acc] = dt match {
     case StringType          => Some(new StringAcc)
     case LongType            => Some(new LongAcc)
@@ -218,21 +212,29 @@ object RowStats {
 
   /** The manifest collector for [[GraftTable.writeGroups]]: builds
     * per-column accumulators over the writer's data schema (only the
-    * columns in `types`), emits (rows, bytes, colStats) per file, and
-    * re-reads the footer instead whenever a corner case would make
-    * accumulation diverge from it. */
+    * columns in `types`) and emits (rows, bytes, colStats) per file.
+    * With `bloom`, it also hashes each row's record key as the row
+    * streams in (two longs per row, see [[KeyBloom]]) and writes the
+    * file's `<file>.bloom` sidecar in `finish`, which runs after the
+    * file has landed at its committed name. */
   final class Collector(
-      types: Map[String, DataType], orc: Boolean, schema: StructType)
+      types: Map[String, DataType], orc: Boolean, bloom: Boolean, schema: StructType)
       extends org.apache.spark.sql.graft.GroupedFileWriter.RowFileCollector[(Long, Long, Map[String, ColStat])] {
     private val cols: Array[(String, Int, Acc)] = types.toArray.flatMap {
       case (name, dt) =>
         val i = schema.fieldNames.indexOf(name)
         if (i < 0) None else accFor(dt, orc).map(a => (name, i, a))
     }
+    private val keyOrd = if (bloom) schema.fieldIndex(Meta.Key) else -1
+    @transient private lazy val md5 = java.security.MessageDigest.getInstance("MD5")
+    // (h1, h2) of every key of the current file, appended pairwise
+    private var hashes = new Array[Long](if (bloom) 1024 else 0)
+    private var nHashes = 0
     private var rows = 0L
 
     override def reset(): Unit = {
       rows = 0L
+      nHashes = 0
       var i = 0
       while (i < cols.length) { cols(i)._3.reset(); i += 1 }
     }
@@ -245,20 +247,30 @@ object RowStats {
         if (row.isNullAt(ord)) acc.nulls += 1 else acc.update(row, ord)
         i += 1
       }
+      if (keyOrd >= 0 && !row.isNullAt(keyOrd)) {
+        if (nHashes + 2 > hashes.length)
+          hashes = java.util.Arrays.copyOf(hashes, hashes.length * 2)
+        val d = KeyBloom.digest(md5, row.getUTF8String(keyOrd).getBytes)
+        hashes(nHashes) = d.getLong
+        hashes(nHashes + 1) = d.getLong
+        nHashes += 2
+      }
     }
 
     override def finish(path: Path, conf: Configuration): (Long, Long, Map[String, ColStat]) = {
-      val bytes = path.getFileSystem(conf).getFileStatus(path).getLen
-      if (cols.exists(_._3.fallback)) {
-        val (r, stats) = GraftTable.footerStats(path, conf, types)
-        (r, bytes, stats)
-      } else {
-        val stats = cols.flatMap { case (name, _, acc) =>
-          if (!acc.seen) Some(name -> ColStat(null, null, acc.nulls))
-          else acc.bounds().map { case (lo, hi) => name -> ColStat(lo, hi, acc.nulls) }
-        }.toMap
-        (rows, bytes, stats)
+      val fs = path.getFileSystem(conf)
+      val bytes = fs.getFileStatus(path).getLen
+      if (keyOrd >= 0) {
+        val b = KeyBloom.sized(rows)
+        var i = 0
+        while (i < nHashes) { b.addHash(hashes(i), hashes(i + 1)); i += 2 }
+        KeyBloom.write(fs, path, b)
       }
+      val stats = cols.flatMap { case (name, _, acc) =>
+        if (!acc.seen) Some(name -> ColStat(null, null, acc.nulls))
+        else acc.bounds().map { case (lo, hi) => name -> ColStat(lo, hi, acc.nulls) }
+      }.toMap
+      (rows, bytes, stats)
     }
   }
 }

@@ -34,12 +34,16 @@ import org.apache.spark.util.SerializableConfiguration
   * caller's repartition+sortWithinPartitions guarantees runs). */
 object GroupedFileWriter {
 
-  /** Per-file accounting hook for [[write]]: observes every (projected)
-    * row as the task streams it into the current file, then produces the
-    * file's manifest value after the file is complete. One instance per
-    * task; `reset()` opens a file's accounting, `finish()` closes it.
-    * `update` receives the writer's UNSAFE row whose buffer is reused —
-    * retained values must be copied. */
+  /** Per-file accounting hook for [[write]], and the only producer of a
+    * file's metadata (graft.write.RowStats.Collector: rows, bytes, column
+    * stats and the key bloom sidecar): observes every (projected) row as
+    * the task streams it into the current file, then produces the file's
+    * manifest value once the file has landed at its committed name, so
+    * anything `finish` writes beside the file (a sidecar) never exists
+    * without it. One instance per task; `reset()` opens a file's
+    * accounting, `finish()` closes it. `update` receives the writer's
+    * UNSAFE row whose buffer is reused — retained values must be
+    * copied. */
   trait RowFileCollector[S] extends Serializable {
     def reset(): Unit
     def update(row: org.apache.spark.sql.catalyst.InternalRow): Unit
@@ -61,8 +65,8 @@ object GroupedFileWriter {
     * [[RowFileCollector]] built once per task from the written data
     * schema (group columns excluded). The collector observes rows AS
     * THEY ARE WRITTEN, so per-file accounting (row count, byte length,
-    * column min/max/null stats) costs no re-open of the just-written
-    * file at all (the reference's write handles populate HoodieWriteStat
+    * column min/max/null stats, key bloom) costs no re-open of the
+    * just-written file at all (the reference's write handles populate HoodieWriteStat
     * the same way, io/HoodieCreateHandle.java:52-210).
     *
     * Each file is written to `.<name>.tmp-<attempt>` beside its final

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.read.GraftReader
 import graft.services.TableServices
-import graft.write.{GraftTable, KeyBloom}
+import graft.write.{GraftTable, KeyBloom, Meta}
 
 class BloomSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -127,5 +127,45 @@ class BloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hit = r.dataOnly(r.pointLookup(Seq("500"))).select("id").as[Long].collect()
     assert(hit.toSeq == Seq(500L))
     assert(r.pointLookup(Seq("nope")).count() == 0)
+  }
+
+  test("blooms are built in the write job: no extra Spark job; sidecars sized and complete") {
+    import spark.implicits._
+    // Spark jobs per operation, bloom probes aside (the tag join's
+    // index pruning reads sidecars; it is not part of writing them)
+    def run(tt: String, bloom: Boolean): (GraftTable, Seq[Int]) = {
+      val tbl = GraftTable.create(spark, tmp(), cfg(tt).copy(bloomIndex = bloom))
+      // updates and deletes hit every file group, so bloom pruning keeps
+      // the same index files as the plain table's range pruning
+      val ops: Seq[() => Any] = Seq(
+        () => tbl.bulkInsert(rows(1L to 1000L)),
+        () => tbl.upsert((1L to 1000L by 7).map(i => (i, s"u$i", 2L)).toDF("id", "v", "ts")),
+        () => tbl.delete((1L to 1000L by 13).map(i => Tuple1(i)).toDF("id"))) ++
+        (if (tt == TableType.MOR) Seq(() => TableServices(tbl).compact()) else Nil)
+      tbl -> ops.map(op => SparkJobs.descriptions(spark)(op())._2.count(_ != "graft: bloom probe"))
+    }
+    for (tt <- Seq(TableType.COW, TableType.MOR)) {
+      val (tbl, withBloom) = run(tt, bloom = true)
+      val (_, plain) = run(tt, bloom = false)
+      assert(withBloom == plain, s"$tt: jobs per operation, bloom $withBloom vs plain $plain")
+
+      val fs = tbl.timeline.fileSystem
+      val written = tbl.timeline.completed()
+        .flatMap(i => tbl.timeline.metadataOf(i).stats)
+      assert(written.size > 8, s"$tt: several files per commit")
+      val sidecars = fs.globStatus(new Path(tbl.basePath, "*.bloom")).map(_.getPath)
+      assert(sidecars.map(_.getName).toSet == written.map(st => s"${st.path}.bloom").toSet,
+        s"$tt: one sidecar per written file")
+      written.foreach { st =>
+        val data = new Path(tbl.absPath(st))
+        val b = KeyBloom.read(fs, data).get
+        val want = KeyBloom.sized(st.rows)
+        assert((b.numBits, b.numHashes) == (want.numBits, want.numHashes),
+          s"$tt: ${st.path} bloom shape for ${st.rows} rows")
+        val keys = spark.read.parquet(data.toString).select(Meta.Key).as[String].collect()
+        assert(keys.length == st.rows && keys.forall(b.mightContain),
+          s"$tt: ${st.path} bloom misses keys of its file")
+      }
+    }
   }
 }

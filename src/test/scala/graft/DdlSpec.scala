@@ -96,6 +96,19 @@ class DdlSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.dataOnly(r.snapshot()).count() == 3)
   }
 
+  test("TRUNCATE runs the write protocol: a rejecting validator aborts it") {
+    val dir = tmp()
+    val tbl = GraftDdl.createTableAs(spark, dir, cfg, rows)
+    val before = tbl.timeline.instants()
+    // the after-snapshot of a truncate is empty: this validator rejects it
+    tbl.withValidators(Seq(new graft.write.SqlQuerySingleResultValidator(Seq(
+      "SELECT count(*) > 0 FROM <TABLE_NAME>#true"))))
+    intercept[graft.write.PreCommitValidationException](GraftDdl.truncate(tbl))
+    assert(tbl.timeline.instants() == before, "no instant, pending or completed, is left")
+    val r = GraftReader(tbl)
+    assert(r.dataOnly(r.snapshot()).count() == 3)
+  }
+
   test("ALTER RENAME TO updates the stored table name") {
     val dir = tmp()
     val tbl = GraftDdl.createTableAs(spark, dir, cfg, rows)

@@ -46,7 +46,7 @@ class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
     org.apache.spark.sql.graft.GroupedFileWriter.write(
       spark, df, Seq("gp", "gf"), dest, "parquet", partitionByLayout("parquet"),
       (dataSchema: org.apache.spark.sql.types.StructType) =>
-        new graft.write.RowStats.Collector(types, false, dataSchema))
+        new graft.write.RowStats.Collector(types, false, false, dataSchema))
   }
 
   test("direct writer reproduces partitionBy's directory layout, escaping and data") {
@@ -155,37 +155,50 @@ class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // ---------------------------------------------------------------------
-  // RowStats parity: the manifest's row-accumulated per-file stats must
-  // be BYTE-IDENTICAL to what the footer decoders produce for the same
-  // file — ColStat strings feed StatsSkipping and SHOW COLUMN STATS.
+  // RowStats fuzz: the manifest's per-file stats against Spark's own
+  // reader and aggregates over the file just written (independent of
+  // RowStats): every recorded bound equals the column's min/max by typed
+  // comparison, counts match, and an entry is missing exactly where
+  // RowStats' rules drop it (NaN in a float/double column, a string
+  // bound over MaxStringBoundBytes).
   // ---------------------------------------------------------------------
 
-  private def assertRowStatsMatchFooter(format: String, seed: Long): Unit = {
+  private def assertRowStatsMatchSpark(format: String, seed: Long): Unit = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val rnd = new scala.util.Random(seed)
-    val longStr = "L" * 1100                 // ORC truncation / fallback path
-    val hugeStr = "H" * 3000                 // parquet 4096-pair rule via fallback
-    def str(): String = rnd.nextInt(6) match {
-      case 0 => ""                           // empty-string bound
-      case 1 => "zαβ✓" + rnd.nextInt(100)    // non-ASCII (UTF-8 byte order)
-      case 2 if format == "parquet" => longStr
-      case 3 if format == "parquet" => hugeStr
-      case _ => "s" + rnd.nextInt(1000)
-    }
+    val maxBound = graft.write.RowStats.MaxStringBoundBytes
+    val longStr = "L" * (maxBound + 76)      // just over the bound rule
+    val hugeStr = "H" * 3000
+    val edgeStr = "E" * maxBound             // exactly at the bound: kept
+    def str(group: String): String =
+      // group g0 holds only long values, so some files' bounds are long
+      if (group == "g0") Seq(longStr, hugeStr, edgeStr)(rnd.nextInt(3))
+      else rnd.nextInt(6) match {
+        case 0 => ""                         // empty-string bound
+        case 1 => "zαβ✓" + rnd.nextInt(100)  // non-ASCII (UTF-8 byte order)
+        case 2 => longStr
+        case 3 => "Ａ" + rnd.nextInt(10)     // U+FF21: UTF-16 order differs
+        case 4 => "😀" + rnd.nextInt(10)     // supplementary code point
+        case _ => "s" + rnd.nextInt(1000)
+      }
     val rows = (1 to 400).map { i =>
       def nl[T](v: T): Any = if (rnd.nextInt(5) == 0) null else v
+      val gp = s"p${i % 3}"
+      val gf = s"g${i % 7}"
       Row(
-        s"p${i % 3}", s"g${i % 7}",
-        nl(str()),
+        gp, gf,
+        nl(str(gf)),
         nl(rnd.nextLong()),
         nl(rnd.nextInt()),
+        // NaN only in p0's files, so p1/p2 files keep double bounds
         nl(rnd.nextInt(4) match {
-          case 0 => -0.0                     // fallback corner
-          case 1 => Double.NaN               // fallback corner
+          case 0 => -0.0
+          case 1 if gp == "p0" => Double.NaN
           case _ => rnd.nextDouble() * 1e6 - 5e5
         }),
-        nl(rnd.nextFloat() * 100f - 50f),
+        nl(if (gp == "p1" && rnd.nextInt(4) == 0) Float.NaN
+          else rnd.nextFloat() * 100f - 50f),
         nl(rnd.nextBoolean()),
         nl(java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(rnd.nextInt(20000).toLong))),
         nl(java.time.LocalDateTime.ofEpochSecond(
@@ -207,34 +220,101 @@ class GroupedWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
       .repartition(4, col("gp"), col("gf"))
       .sortWithinPartitions(col("gp"), col("gf"))
-    val types: Map[String, DataType] =
-      schema.fields.filterNot(f => f.name == "gp" || f.name == "gf")
-        .map(f => f.name -> f.dataType).toMap
+    val dataFields = schema.fields.filterNot(f => f.name == "gp" || f.name == "gf")
+    val types: Map[String, DataType] = dataFields.map(f => f.name -> f.dataType).toMap
     val dest = tmp()
     val layout = partitionByLayout(format)
     val manifest = org.apache.spark.sql.graft.GroupedFileWriter.write(
       spark, df, Seq("gp", "gf"), dest, format, layout,
       (dataSchema: StructType) =>
-        new graft.write.RowStats.Collector(types, format == "orc", dataSchema))
-    assert(manifest.nonEmpty)
-    val conf = spark.sessionState.newHadoopConf()
+        new graft.write.RowStats.Collector(types, format == "orc", false, dataSchema))
+    assert(manifest.size == 21, "one file per (gp, gf) group")
+
+    // the reference: Spark's reader + aggregates, one row per file
+    val aggs = count(lit(1)) +: dataFields.toSeq.flatMap { f =>
+      val c = col(f.name)
+      Seq(count(c), min(c), max(c)) ++
+        (if (f.dataType == DoubleType || f.dataType == FloatType)
+          Seq(max(when(isnan(c), 1).otherwise(0)))
+        else Nil)
+    }
+    val ref: Map[String, Row] = spark.read.schema(StructType(dataFields)).format(format)
+      .load(s"$dest/gp=*/gf=*/part-00000.$format")
+      .groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*)
+      .collect().map(r => new Path(r.getString(0)).toUri.getPath -> r).toMap
+
+    def utf8Len(s: String): Int = s.getBytes("UTF-8").length
+    // typed equality of a recorded bound with Spark's aggregate value
+    def sameValue(dt: DataType, bound: String, v: Any): Boolean = dt match {
+      case StringType  => bound == v
+      case LongType    => bound.toLong == v.asInstanceOf[Long]
+      case IntegerType => bound.toInt == v.asInstanceOf[Int]
+      case DoubleType  => bound.toDouble == v.asInstanceOf[Double] // -0.0 == 0.0
+      case FloatType   => java.lang.Float.parseFloat(bound) == v.asInstanceOf[Float]
+      case BooleanType => bound.toBoolean == v.asInstanceOf[Boolean]
+      case DateType    => java.time.LocalDate.parse(bound) == (v match {
+        case d: java.sql.Date => d.toLocalDate
+        case d                => d
+      })
+      case TimestampNTZType => java.time.LocalDateTime.parse(bound) == v
+      case _: DecimalType =>
+        new java.math.BigDecimal(bound).compareTo(v.asInstanceOf[java.math.BigDecimal]) == 0
+      case other => fail(s"no typed comparison for $other")
+    }
+    var dropped = Set.empty[String] // columns some file dropped, by rule
+    var kept = Set.empty[String]    // valued columns some file recorded
     manifest.foreach { case (group, (rowsGot, bytesGot, statsGot)) =>
       val p = new Path(new Path(dest), layout(group))
-      val pathStr = p.toString
-      val fs = p.getFileSystem(conf)
-      val (rowsExp, statsExp) = graft.write.GraftTable.footerStats(p, conf, types)
-      assert(rowsGot == rowsExp, s"rows for $pathStr")
-      assert(bytesGot == fs.getFileStatus(p).getLen, s"bytes for $pathStr")
-      assert(statsGot == statsExp,
-        s"stats for $pathStr ($format):\n got=${statsGot.toSeq.sortBy(_._1)}\n exp=${statsExp.toSeq.sortBy(_._1)}")
+      val where = s"$p ($format)"
+      val r = ref.getOrElse(p.toUri.getPath, fail(s"Spark read no rows from $where"))
+      assert(rowsGot == r.getLong(1), s"rows for $where")
+      assert(bytesGot == p.getFileSystem(spark.sessionState.newHadoopConf())
+        .getFileStatus(p).getLen, s"bytes for $where")
+      var at = 2 // after the file name and count(1)
+      dataFields.foreach { f =>
+        val nonNull = r.getLong(at)
+        val (lo, hi) = (r.get(at + 1), r.get(at + 2))
+        at += 3
+        val hasNaN = f.dataType match {
+          case DoubleType | FloatType => at += 1; r.getInt(at - 1) == 1
+          case _ => false
+        }
+        val got = statsGot.get(f.name)
+        val expectEntry =
+          if (nonNull == 0L) true
+          else f.dataType match {
+            case BinaryType => false
+            case DoubleType | FloatType => !hasNaN
+            case StringType =>
+              utf8Len(lo.asInstanceOf[String]) <= maxBound &&
+                utf8Len(hi.asInstanceOf[String]) <= maxBound
+            case _ => true
+          }
+        assert(got.isDefined == expectEntry,
+          s"${f.name} of $where: entry ${if (expectEntry) "missing" else "present"}: $got")
+        if (nonNull > 0 && !expectEntry && f.dataType != BinaryType) dropped += f.name
+        got.foreach { cs =>
+          assert(cs.nullCount == rowsGot - nonNull, s"${f.name} null count of $where")
+          if (nonNull == 0L) assert(cs.min == null && cs.max == null, s"${f.name} of $where")
+          else {
+            kept += f.name
+            assert(sameValue(f.dataType, cs.min, lo), s"${f.name} min of $where: $cs vs $lo")
+            assert(sameValue(f.dataType, cs.max, hi), s"${f.name} max of $where: $cs vs $hi")
+          }
+        }
+      }
     }
+    // the fuzz reaches every rule and every recorded type
+    assert(Set("s", "d", "f").subsetOf(dropped), s"dropped by rule: $dropped")
+    assert(Set("s", "l", "i", "d", "f", "b", "dt", "ts", "dec").subsetOf(kept),
+      s"recorded: $kept")
   }
 
-  test("row-accumulated manifest stats are identical to the parquet footer's") {
-    (1L to 3L).foreach(assertRowStatsMatchFooter("parquet", _))
+  test("row-accumulated manifest stats match Spark's aggregates (parquet)") {
+    (1L to 3L).foreach(assertRowStatsMatchSpark("parquet", _))
   }
 
-  test("row-accumulated manifest stats are identical to the ORC footer's") {
-    (1L to 3L).foreach(assertRowStatsMatchFooter("orc", _))
+  test("row-accumulated manifest stats match Spark's aggregates (ORC)") {
+    (1L to 3L).foreach(assertRowStatsMatchSpark("orc", _))
   }
 }

@@ -154,6 +154,43 @@ class MergeStrategySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(err.getMessage.contains("n_docs"))
   }
 
+  test("MOR CDC merges through the table's strategy, like COW CDC and the snapshot") {
+    import spark.implicits._
+    def run(tt: String, strategy: String)
+        : (Seq[(String, Long, Option[Long], String, String)], Map[Long, (Option[Long], String, String)]) = {
+      val tbl = GraftTable.create(spark, tmp(), TableConfig(
+        name = "cdc", tableType = tt, keyFields = Seq("id"), orderingField = "ts",
+        mergeStrategy = strategy, targetFileRows = 1000))
+      tbl.bulkInsert(Seq((1L, 10L, "a", "x"), (2L, 10L, "b", "y"), (3L, 10L, "c", "z"))
+        .toDF("id", "ts", "v", "w"))
+      val begin = tbl.timeline.completed().last.time
+      // 1: a late update (lower ts); 2: a newer update whose v is null
+      // (partial_update inherits "b"); 4: an insert; then 3 is deleted
+      tbl.upsert(Seq[(Long, Long, String, String)]((1L, 5L, "late", "x5"),
+        (2L, 20L, null, "y2"), (4L, 1L, "d", "w")).toDF("id", "ts", "v", "w"))
+      tbl.delete(Seq(Tuple1(3L)).toDF("id"))
+      val r = GraftReader(tbl)
+      val cdc = r.incrementalCdc(begin)
+        .select(col("_g_operation"), col("id"), col("ts"), col("v"), col("w"))
+        .as[(String, Long, Option[Long], String, String)].collect().sortBy(_._2).toSeq
+      val snap = r.dataOnly(r.snapshot()).select("id", "ts", "v", "w")
+        .as[(Long, Option[Long], String, String)].collect()
+        .map(x => x._1 -> (x._2, x._3, x._4)).toMap
+      (cdc, snap)
+    }
+    Seq("overwrite_latest", "event_time", "partial_update").foreach { strategy =>
+      val (cow, cowSnap) = run(TableType.COW, strategy)
+      val (mor, morSnap) = run(TableType.MOR, strategy)
+      assert(morSnap == cowSnap, s"$strategy: snapshots differ")
+      assert(mor == cow, s"$strategy: MOR CDC $mor != COW CDC $cow")
+      // every emitted after image is the snapshot's row
+      mor.filter(_._1 != "D").foreach { case (op, id, ts, v, w) =>
+        assert(morSnap.get(id).contains((ts, v, w)), s"$strategy: $op row of $id")
+      }
+      assert(mor.exists(r => r._1 == "D" && r._2 == 3L), s"$strategy: delete emitted")
+    }
+  }
+
   test("unknown strategy names fail loudly at merge time") {
     import spark.implicits._
     val tbl = GraftTable.create(spark, tmp(), cfg(TableType.COW).copy(

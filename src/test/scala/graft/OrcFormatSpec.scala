@@ -17,7 +17,7 @@ import graft.write.{GraftTable, Meta}
   * common/model/HoodieFileFormat.java:29-43 +
   * io/storage/HoodieOrcWriter.java. The format choice must be invisible
   * to every table-level semantic: COW/MOR lifecycle, incremental reads,
-  * footer-derived column stats (data skipping), bloom sidecars,
+  * per-file column stats (data skipping), bloom sidecars,
   * compaction — only the bytes on disk differ. */
 class OrcFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -251,9 +251,9 @@ class OrcFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("stats decoders agree across formats: parquet vs ORC ColStats") {
     import spark.implicits._
-    // one frame covering every decode branch both readers share:
-    // long, string, double, boolean, decimal, date — plus nulls so the
-    // null-count paths (parquet numNulls vs ORC rows−numberOfValues) meet
+    // one frame covering every stats encoding both formats share:
+    // long, string, double, boolean, decimal, date, timestamps — plus
+    // nulls, so null counts are compared too
     import org.apache.spark.sql.types._
     def ntz(s: String) = java.time.LocalDateTime.parse(s)
     def ltz(s: String) = java.time.Instant.parse(s)
@@ -295,7 +295,7 @@ class OrcFormatSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(pq.contains(c), s"parquet stats missing for $c")
       assert(orc.contains(c), s"orc stats missing for $c")
       assert(pq(c) == orc(c),
-        s"decoder divergence on $c: parquet=${pq(c)} orc=${orc(c)}")
+        s"stats divergence on $c: parquet=${pq(c)} orc=${orc(c)}")
     }
   }
 

@@ -1,12 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,30 +49,8 @@ class PublishScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       targetFileRows = 1000, statsColumns = Seq("v"), commitStore = store,
       baseFormat = format)
 
-  /** Descriptions of every Spark job started while `body` runs. A marker
-    * job run afterwards flushes the asynchronous listener bus: once the
-    * listener has seen it, it has seen every earlier job too. */
-  private def jobDescriptions(body: => Unit): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val marker = s"pubscale-marker-${System.nanoTime()}"
-    try {
-      body
-      sc.setJobDescription(marker)
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 60000
-      while (!seen.contains(marker) && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(seen.contains(marker), "listener bus did not drain")
-      seen.asScala.toSeq.filterNot(_ == marker)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobDescriptions(body: => Unit): Seq[String] =
+    SparkJobs.descriptions(spark)(body)._2
 
   /** Data files under the table (everything outside `.graft`). */
   private def dataFiles(tbl: GraftTable): Seq[String] = {

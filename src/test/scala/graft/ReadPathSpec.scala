@@ -1,11 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
@@ -106,30 +101,7 @@ class ReadPathSpec extends AnyFunSuite {
       s"$hint: scans ${locs.map(_.getClass.getSimpleName)}")
   }
 
-  /** Descriptions of every job started while `body` runs. A marker job
-    * run afterwards flushes the asynchronous listener bus: once the
-    * listener has seen it, it has seen every earlier job too. */
-  def jobDescriptions[T](body: => T): (T, Seq[String]) = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val marker = s"read-path-marker-${System.nanoTime()}"
-    try {
-      val out = body
-      sc.setJobDescription(marker)
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 60000
-      while (!seen.contains(marker) && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(seen.contains(marker), "listener bus did not drain")
-      (out, seen.asScala.toSeq.filterNot(_ == marker))
-    } finally sc.removeSparkListener(listener)
-  }
+  def jobDescriptions[T](body: => T): (T, Seq[String]) = SparkJobs.descriptions(spark)(body)
 
   /** 400 rows over 4 partitions in groups of at most 10 rows. */
   def wide(tag: String, ts: Long): DataFrame =
@@ -233,4 +205,46 @@ class ReadPathSpec extends AnyFunSuite {
           all.filter(x => keep(x._2)).sortBy(_._1), s"rows under $pred")
       }
     }
+
+  // ---------------------------------------------------------------------
+  // string bounds are compared in the order they are written in
+  // ---------------------------------------------------------------------
+
+  // U+FF21 sorts BELOW U+1F600 by code point (= UTF-8 bytes, the order
+  // RowStats and Spark record bounds in) but ABOVE it by UTF-16 code
+  // unit (String.compareTo): one file holding both has min "Ａ" and max
+  // "😀", which a UTF-16 reader takes for an empty range
+  val (fullwidth, emoji) = ("Ａ", "😀")
+
+  def stringTable(): GraftTable = {
+    import spark.implicits._
+    val tbl = GraftTable.create(spark, tmp(), TableConfig(
+      name = "cp", tableType = TableType.COW, keyFields = Seq("k"),
+      orderingField = "ts", targetFileRows = 1000, smallFileRows = 0,
+      statsColumns = Seq("s")))
+    tbl.bulkInsert(Seq((fullwidth, fullwidth, 1L), (emoji, emoji, 1L)).toDF("k", "s", "ts"))
+    val files = Snapshot.resolve(tbl.timeline).slices.flatMap(_.allFiles)
+    assert(files.size == 1, "both rows in one file")
+    assert(files.head.minKey == fullwidth && files.head.maxKey == emoji)
+    tbl
+  }
+
+  test("string bounds in code-point order: stats skipping, startsWith and point lookup") {
+    import org.apache.spark.sql.functions.col
+    val r = GraftReader(stringTable())
+    assert(r.snapshot().filter(col("s") === fullwidth).count() == 1, "equality skipped the file")
+    assert(r.snapshot().filter(col("s").startsWith(fullwidth)).count() == 1,
+      "startsWith skipped the file")
+    assert(r.pointLookup(Seq(fullwidth)).count() == 1, "point lookup pruned the file")
+  }
+
+  test("string bounds in code-point order: an upsert finds the existing key's file") {
+    import spark.implicits._
+    val tbl = stringTable()
+    tbl.upsert(Seq((fullwidth, "updated", 2L)).toDF("k", "s", "ts"))
+    val r = GraftReader(tbl)
+    val got = r.dataOnly(r.snapshot()).select("k", "s").as[(String, String)].collect().sorted.toSeq
+    assert(got == Seq(fullwidth -> "updated", emoji -> emoji).sorted,
+      s"the upsert must update, not duplicate: $got")
+  }
 }

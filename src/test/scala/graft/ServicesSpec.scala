@@ -629,11 +629,15 @@ class ServicesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // earlier-time parked plan (a Requested service instant is not a
     // pending data writer; a 30s stall + IllegalStateException here was
     // the cross-service deadlock)
+    val sleeps = new java.util.concurrent.atomic.AtomicLong
     val t0 = System.currentTimeMillis()
-    val compacted = svc.compact()
-    val took = System.currentTimeMillis() - t0
+    TableServices.awaitSleepProbe = sleeps
+    val compacted =
+      try svc.compact() finally TableServices.awaitSleepProbe = null
+    info(s"compaction took ${System.currentTimeMillis() - t0} ms")
     assert(compacted.nonEmpty, "compaction must run under a parked clustering plan")
-    assert(took < 8000, s"compaction stalled ${took}ms behind the parked plan")
+    assert(sleeps.get == 0L,
+      s"compaction waited ${sleeps.get} times behind the parked plan")
     // the parked plan still executes to the SAME final state
     svc.runScheduledClustering(parked.get)
     val r = GraftReader(tbl)
